@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import PipelineConfig
+from .guards import collect_at_most
 
 MANIFEST_DIR = "_manifests"
 BUCKET_COL = "part_bucket"
@@ -195,34 +196,30 @@ def export_npy_sequences(
     artifact (reference: export_sequences src/export_aligned/npy_export.rs:
     36-116 — {day}_sequences.npy [N,T,F] float32, {day}_labels.npy [N] int8,
     metadata JSON). The parquet table is the production sink; this collects
-    a bounded slice to the driver, so it is for fixtures/small exports only
-    (hard cap max_rows).
+    to the driver (``guards.collect_at_most``, cap max_rows), so it is for
+    fixtures/small exports only.
 
     seq_df must have a `sequence: array<array<double>>` column (from
     operators.sequence.build_sequences) and optionally a label column.
     """
     import numpy as np
 
-    n = seq_df.count()
-    if n > max_rows:
-        raise ValueError(f"npy export capped at {max_rows} rows, got {n}")
     cols = ["sequence"] + ([label_col] if label_col else [])
-    pdf = seq_df.select(*cols).toPandas()
-    # explicit [N][T][F] nesting — Arrow may hand back ragged object arrays
-    seqs = np.array(
-        [[list(vec) for vec in s] for s in pdf["sequence"]], dtype=np.float32
-    )
+    rows = collect_at_most(seq_df.select(*cols), max_rows, "export_npy_sequences")
+    if rows is None:
+        raise ValueError(f"npy export capped at {max_rows} rows; got more")
+    seqs = np.array([[list(vec) for vec in r[0]] for r in rows], dtype=np.float32)
     out = Path(out_dir)
     out.mkdir(parents=True, exist_ok=True)
     np.save(out / f"{tag}_sequences.npy", seqs)
     meta = {
         "shape": list(seqs.shape),
         "dtype": "float32",
-        "rows": int(n),
+        "rows": len(rows),
         "written_at_unix": time.time(),
     }
     if label_col:
-        labels = pdf[label_col].to_numpy(dtype=np.int8)
+        labels = np.array([r[1] for r in rows], dtype=np.int8)
         np.save(out / f"{tag}_labels.npy", labels)
         meta["labels_shape"] = list(labels.shape)
         meta["labels_dtype"] = "int8"

@@ -119,13 +119,7 @@ def tf_idf_top_terms(
     )
 
 
-URL_RE = r"https?://[a-zA-Z0-9.-]+(/[a-zA-Z0-9./_-]*)?"
 DOMAIN_RE = r"https?://([a-zA-Z0-9.-]+)"
-
-
-def url_count(col) -> F.Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.size(F.regexp_extract_all(c, F.lit(URL_RE), F.lit(0))).cast("long")
 
 
 def domain_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -2428,7 +2422,9 @@ def naive_bayes_confusion(
     # argmax(score desc, _c asc) == min of the struct (-score, _c): int64
     # negation is exact, struct comparison is field-ordered, and string
     # min is the ascending tie-break — same winner as the row_number
-    # window, but partial-aggregable (map-side combine) with no sort.
+    # window. Struct min is not hash-aggregable, so the plan is a
+    # map-side-combinable SortAggregate; it replaces the window and its
+    # per-partition global sort, not sorting altogether.
     return (
         scored.groupBy("_id", "_y")
         .agg(F.min(F.struct((-F.col("score")).alias("_ns"), F.col("_c"))).alias("_m"))

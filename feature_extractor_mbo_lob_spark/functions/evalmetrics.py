@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..guards import collect_at_most
+
 _D38 = "decimal(38,0)"
 
 
@@ -546,6 +548,27 @@ def brier_decomposition(
     )
 
 
+# Contingency cells (|clusters|·|labels| rows) v_measure and
+# adjusted_rand_index finish on the driver.
+MAX_CONTINGENCY_CELLS = 1_000_000
+
+
+def _contingency_cells(df, cluster_col, label_col, what):
+    """(cluster, label, n) cells: ONE partial-aggregated groupBy, then one
+    bounded collect (``guards.collect_at_most``); ValueError past the cap."""
+    rows = collect_at_most(
+        df.groupBy(F.col(cluster_col).alias("k"), F.col(label_col).alias("c"))
+        .agg(F.count(F.lit(1)).cast("long").alias("n")),
+        MAX_CONTINGENCY_CELLS, what,
+    )
+    if rows is None:
+        raise ValueError(
+            f"{what}: more than MAX_CONTINGENCY_CELLS={MAX_CONTINGENCY_CELLS} "
+            "(cluster, label) cells; evaluate on coarser clusters or labels."
+        )
+    return [(r["k"], r["c"], int(r["n"])) for r in rows]
+
+
 def v_measure(
     df: DataFrame, cluster_col: str, label_col: str
 ) -> DataFrame:
@@ -566,30 +589,17 @@ def v_measure(
     H(cluster) = 0, v = 0 when h + c = 0.
 
     Scale shape: ONE groupBy collapses the corpus to the contingency
-    cells; margins are aggregates of that tiny frame joined back on
-    their keys; one 1-row final aggregate. Bounded by
-    |clusters|·|labels|, never rows.
+    cells (bounded by |clusters|·|labels|, never rows), which finish on
+    the driver (``_contingency_cells``) in the oracle's IEEE operation
+    order: same divisions, same ln, same floor(x·1e9 + 0.5).
 
     Returns one row: (n, hl_nanos, hc_nanos, hlk_nanos, hkl_nanos,
     homogeneity, completeness, v_measure).
-
-    Optimization shape (r6): ONE Spark job reduces the corpus to the
-    contingency cells (partial-aggregated groupBy); the cells frame is
-    |clusters|·|labels| rows — bounded by construction — so it is
-    collected and the margins/entropies finish on the driver with the
-    IDENTICAL IEEE operation order (same divisions, same ln, same
-    floor(x·1e9 + 0.5) quantization), replacing four broadcast-exchange
-    stages with integer arithmetic on a dozen rows.
     """
     import math
 
     spark = df.sparkSession
-    cells = [
-        (r["k"], r["c"], int(r["n"]))
-        for r in df.groupBy(
-            F.col(cluster_col).alias("k"), F.col(label_col).alias("c")
-        ).agg(F.count(F.lit(1)).cast("long").alias("n")).collect()
-    ]
+    cells = _contingency_cells(df, cluster_col, label_col, "v_measure")
     schema = (
         "n long, hl_nanos long, hc_nanos long, hlk_nanos long, hkl_nanos long, "
         "homogeneity_raw double, completeness_raw double, v_measure_raw double"
@@ -639,28 +649,16 @@ def adjusted_rand_index(
     cluster AND single label, or n < 2) releases 1.0 when num = 0 (the
     sklearn convention: identical trivial partitions) else 0.0.
 
-    Scale shape: ONE groupBy to the contingency cells; margins are
-    aggregates of that tiny frame; one 1-row final aggregate. Bounded by
-    |clusters|·|labels|. Magnitude bound: the C·Sij product stays inside
-    decimal(38,0) to n ~ 3e9 rows; past that, compute ARI on a
-    hash-sampled contingency (the pair counts concentrate fast).
+    Scale shape: ONE groupBy to the contingency cells (bounded by
+    |clusters|·|labels|), which finish on the driver
+    (``_contingency_cells``) in exact Python integers. Magnitude bound:
+    the oracle's C·Sij product stays inside decimal(38,0) to n ~ 3e9
+    rows; past that, compute ARI on a hash-sampled contingency.
 
     Returns one row: (n, sij, sa, sb, ari_raw).
-
-    Optimization shape (r6): ONE Spark job reduces the corpus to the
-    contingency cells; the bounded cells frame is collected and the pair
-    counts finish on the driver as exact Python integers (arbitrary
-    precision — a strict superset of decimal(38,0)) with the identical
-    single IEEE division at release, replacing three broadcast-exchange
-    stages.
     """
     spark = df.sparkSession
-    cells = [
-        (r["k"], r["c"], int(r["n"]))
-        for r in df.groupBy(
-            F.col(cluster_col).alias("k"), F.col(label_col).alias("c")
-        ).agg(F.count(F.lit(1)).cast("long").alias("n")).collect()
-    ]
+    cells = _contingency_cells(df, cluster_col, label_col, "adjusted_rand_index")
     schema = "n long, sij long, sa long, sb long, ari_raw double"
     if not cells:
         # mirror the empty-input frame: null aggregates, when() falls

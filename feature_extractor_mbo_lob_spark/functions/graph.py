@@ -31,6 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..guards import collect_at_most
 from ..operators.dedup import normalize_text
 
 
@@ -107,37 +108,30 @@ def pagerank_int(
     with W(u) the total out-weight of u. Every op is int64 floor
     division on positive operands (Spark ``div`` == DuckDB ``//`` for
     positives), so results are engine-exact. Dangling-node mass is
-    dropped (documented spec). N is fetched with one 1-row count — the
-    only driver action; everything else is plan-chained joins. The
-    weighted edge list and node set are localCheckpoint-ed ONCE so the
-    unrolled iterations don't re-derive the (possibly expensive) edge
-    lineage — for a parquet-derived edge list the untruncated
-    3-iteration plan explodes to hundreds of exchanges. Rank frames are
-    left plan-chained: linear growth per round, and eager per-round
-    checkpoints were measured 40% slower on the 6.7M-edge turn graph.
+    dropped (documented spec). Degenerate input, identical on both
+    branches: edges with a null endpoint are dropped; a source whose
+    total out-weight is 0 contributes 0 (DuckDB ``// 0`` is NULL) and
+    still counts in N.
 
-    Bounded fast path (the hits_int / markov_stationary discipline): an
-    aggregated edge list within ``max_driver_edges`` — every bucket
-    graph is O(buckets²) rows by construction — is COLLECTED after
-    Spark's corpus-to-edge-list reduction and the fixed-round iteration
-    finishes on the driver in exact Python integers (arbitrary
-    precision ⊇ int64; ``//`` on the non-negative operands is the
-    identical trunc division), replacing ~10 fixed-overhead join/groupBy
-    shuffle stages with one tiny createDataFrame. Past the cap the
-    distributed loop below runs unchanged (turn-level / web graphs).
+    Bounded fast path: an edge list within ``max_driver_edges`` (every
+    bucket graph is O(buckets²) rows) finishes on the driver in exact
+    Python integers (``guards.collect_at_most``). Past the cap the
+    distributed loop below runs: the edge list and node set are
+    localCheckpoint-ed once so the unrolled rounds don't re-derive the
+    edge lineage; rank frames stay plan-chained (eager per-round
+    checkpoints were measured 40% slower on the 6.7M-edge turn graph).
 
     Returns ``DataFrame[node: string, rank_micro: long]``.
     """
-    edges = edges.localCheckpoint(eager=True)
-    if edges.count() <= max_driver_edges:
+    edges = edges.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
+    rows = collect_at_most(
+        edges.select("src", "dst", F.col("w").cast("long").alias("w")),
+        max_driver_edges, "pagerank_int",
+    )
+    if rows is not None:
         spark = edges.sparkSession
         node_type = edges.schema["src"].dataType.simpleString()
-        e = [
-            (r["src"], r["dst"], int(r["w"]))
-            for r in edges.select(
-                "src", "dst", F.col("w").cast("long").alias("w")
-            ).collect()
-        ]
+        e = [(r["src"], r["dst"], int(r["w"])) for r in rows]
         schema = f"node {node_type}, rank_micro long"
         if not e:
             return spark.createDataFrame([], schema=schema)
@@ -151,7 +145,8 @@ def pagerank_int(
         for _ in range(int(iterations)):
             acc: dict = {}
             for s, d, w in e:
-                acc[d] = acc.get(d, 0) + (rank[s] * w) // out_w[s]
+                if out_w[s]:
+                    acc[d] = acc.get(d, 0) + (rank[s] * w) // out_w[s]
             rank = {
                 v: base + (damping_num * acc.get(v, 0)) // damping_den
                 for v in node_set
@@ -159,6 +154,7 @@ def pagerank_int(
         return spark.createDataFrame(
             [(v, rank[v]) for v in node_set], schema=schema
         )
+    edges = edges.localCheckpoint(eager=True)
     nodes = (
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
@@ -177,7 +173,7 @@ def pagerank_int(
             ew.join(ranks, ew["src"] == ranks["node"])
             .select(
                 F.col("dst").alias("node"),
-                F.expr("(rank_micro * w) div out_w").alias("c"),
+                F.expr("(rank_micro * w) div nullif(out_w, 0)").alias("c"),
             )
             .groupBy("node")
             .agg(F.sum("c").alias("c_sum"))
@@ -431,50 +427,30 @@ def textrank_turns(
     return pairs.groupBy("conv_id").applyInPandas(per_conv, schema)
 
 
-def _hits_int_local(edges: DataFrame, iterations: int, scale: int) -> DataFrame:
-    """Single-task HITS over a bounded aggregated edge list: all rows of
-    the (already size-checked) edge table flow through one mapInPandas
-    partition and the iteration runs in Python arbitrary-precision ints —
+def _hits_int_local(rows, iterations: int, scale: int) -> list[tuple]:
+    """HITS over a collected edge list in Python arbitrary-precision ints —
     the exact hugeint/decimal(38,0) arithmetic of the distributed path
     (same floor divisions, same greatest(tot, 1) guard), never a float."""
-    import pandas as pd
-
-    node_t = dict(edges.dtypes)["src"]
-    schema = f"node {node_t}, hub_micro long, auth_micro long"
-
-    def run(batches):
-        frames = [b for b in batches if len(b)]
-        if not frames:
-            return
-        pdf = pd.concat(frames, ignore_index=True)
-        src = pdf["src"].tolist()
-        dst = pdf["dst"].tolist()
-        w = [int(x) for x in pdf["w"].tolist()]
-        nodes = sorted(set(src) | set(dst))
-        n = len(nodes)
-        init = scale // n
-        h = {v: init for v in nodes}
-        a = {v: init for v in nodes}
-        for _ in range(iterations):
-            raw = {}
-            for s, d, ww in zip(src, dst, w):
-                raw[d] = raw.get(d, 0) + ww * h[s]
-            tot = max(sum(raw.values()), 1)
-            a = {v: (raw.get(v, 0) * scale) // tot for v in nodes}
-            raw = {}
-            for s, d, ww in zip(src, dst, w):
-                raw[s] = raw.get(s, 0) + ww * a[d]
-            tot = max(sum(raw.values()), 1)
-            h = {v: (raw.get(v, 0) * scale) // tot for v in nodes}
-        yield pd.DataFrame(
-            {
-                "node": nodes,
-                "hub_micro": [h[v] for v in nodes],
-                "auth_micro": [a[v] for v in nodes],
-            }
-        )
-
-    return edges.coalesce(1).mapInPandas(run, schema)
+    src = [r["src"] for r in rows]
+    dst = [r["dst"] for r in rows]
+    w = [int(r["w"]) for r in rows]
+    nodes = sorted(set(src) | set(dst))
+    n = len(nodes)
+    init = scale // n
+    h = {v: init for v in nodes}
+    a = {v: init for v in nodes}
+    for _ in range(iterations):
+        raw = {}
+        for s, d, ww in zip(src, dst, w):
+            raw[d] = raw.get(d, 0) + ww * h[s]
+        tot = max(sum(raw.values()), 1)
+        a = {v: (raw.get(v, 0) * scale) // tot for v in nodes}
+        raw = {}
+        for s, d, ww in zip(src, dst, w):
+            raw[s] = raw.get(s, 0) + ww * a[d]
+        tot = max(sum(raw.values()), 1)
+        h = {v: (raw.get(v, 0) * scale) // tot for v in nodes}
+    return [(v, h[v], a[v]) for v in nodes]
 
 
 def hits_int(
@@ -500,30 +476,27 @@ def hits_int(
     division and bit-matches DuckDB hugeint `//` (tested).
 
     Scale shape: like pagerank_int, each iteration is two join+groupBy
-    passes over the aggregated edge list; for bucket graphs the edge
-    table is O(buckets^2) regardless of corpus size. The edge list (and
-    the node set) is localCheckpoint-ed ONCE — without it every unrolled
-    iteration branch re-derives the edge lineage and the physical plan
-    explodes (observed 1370 exchanges for 3 iterations over a
-    parquet-derived edge list; 2 with truncation). Per-round score frames
-    are NOT checkpointed: their lineage over the checkpointed edges grows
-    only linearly in iterations, and eager per-round materialization
-    measurably hurts large node sets (turn-level graphs).
-
-    Bounded fast path: an aggregated edge list within ``max_local_edges``
-    (every bucket graph — O(buckets^2) rows by construction) runs the whole
-    iteration in ONE single-task mapInPandas stage using Python
-    arbitrary-precision integers, which implement the hugeint contract
-    exactly; 3 iterations over a 256-row bucket graph otherwise cost ~20
-    fixed-overhead shuffle stages. Past the cap the generic distributed
-    join loop below runs unchanged (turn-level / web-scale graphs).
+    passes over the aggregated edge list. An edge list within
+    ``max_local_edges`` (every bucket graph) finishes on the driver in
+    exact Python integers (``guards.collect_at_most``). Past the cap the
+    edge list and node set are localCheckpoint-ed once (without it every
+    unrolled round re-derives the edge lineage: 1370 exchanges for 3
+    rounds over a parquet-derived edge list); per-round score frames
+    stay plan-chained. Edges with a null endpoint are dropped first.
 
     Returns ``DataFrame[node, hub_micro: long, auth_micro: long]``.
     """
+    edges = edges.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
+    rows = collect_at_most(
+        edges.select("src", "dst", "w"), max_local_edges, "hits_int"
+    )
+    if rows is not None:
+        node_t = dict(edges.dtypes)["src"]
+        out = _hits_int_local(rows, iterations, scale) if rows else []
+        return edges.sparkSession.createDataFrame(
+            out, schema=f"node {node_t}, hub_micro long, auth_micro long"
+        )
     edges = edges.localCheckpoint(eager=True)
-    n_edges = edges.count()
-    if n_edges <= max_local_edges:
-        return _hits_int_local(edges, iterations, scale)
     nodes = (
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
@@ -964,6 +937,44 @@ def degree_assortativity(
     )
 
 
+# Transition-count edges the Markov chain finishes collect to the driver
+# (|states|² rows; every caller's states are roles or tools).
+MAX_MARKOV_EDGES = 200_000
+
+
+def _markov_chain(edges, iterations, src_col, dst_col, w_col, what):
+    """(states, ppm matrix, stationary ppm) of a transition-count edge
+    list, in exact Python integers after one bounded collect."""
+    rows = collect_at_most(
+        edges.select(
+            F.col(src_col).alias("src"), F.col(dst_col).alias("dst"),
+            F.col(w_col).cast("long").alias("c"),
+        ),
+        MAX_MARKOV_EDGES, what,
+    )
+    if rows is None:
+        raise ValueError(
+            f"{what}: more than MAX_MARKOV_EDGES={MAX_MARKOV_EDGES} "
+            "transition edges; the chain is |states|² rows, so coarsen "
+            "the states before calling."
+        )
+    e = [(r["src"], r["dst"], int(r["c"])) for r in rows]
+    c_src: dict = {}
+    for s, _d, c in e:
+        c_src[s] = c_src.get(s, 0) + c
+    pmat = [(s, d, (c * 1_000_000) // c_src[s]) for s, d, c in e]
+    states = sorted({s for s, _, _ in e} | {d for _, d, _ in e})
+    if not states:
+        return states, pmat, {}
+    v = {s: 1_000_000 // len(states) for s in states}
+    for _ in range(int(iterations)):
+        acc: dict = {}
+        for s, d, p in pmat:
+            acc[d] = acc.get(d, 0) + v[s] * p
+        v = {s: acc.get(s, 0) // 1_000_000 for s in states}
+    return states, pmat, v
+
+
 def markov_stationary(
     edges: DataFrame,
     iterations: int = 4,
@@ -987,41 +998,20 @@ def markov_stationary(
     edges simply absorb nothing (their column receives mass only via
     p_ij); fixed ``iterations`` = bounded plan depth.
 
-    Scale shape: the transition matrix is |states|^2 rows (states =
-    roles/tools — tiny, a documented bound), so after Spark reduces the
-    corpus to the aggregated edge list, the matrix is COLLECTED and the
-    fixed-round power iteration runs on the driver in exact Python
-    integers (arbitrary precision — a strict superset of the
-    decimal(38,0) spec; floor division on the non-negative operands is
-    the identical trunc division). One Spark job replaces 3
-    localCheckpoints + per-round joins; the released ppm values are
-    bit-identical by the all-integer spec.
+    Scale shape: Spark reduces the corpus to the |states|² edge list;
+    the power iteration finishes on the driver in exact Python integers
+    (``guards.collect_at_most``, cap ``MAX_MARKOV_EDGES``, ValueError
+    past it).
 
     Returns ``DataFrame[state: string, pi_ppm: long]``.
     """
-    spark = edges.sparkSession
-    e_df = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst"),
-        F.col(w_col).cast("long").alias("c"),
+    state_type = edges.select(src_col).schema[0].dataType.simpleString()
+    states, _pmat, v = _markov_chain(
+        edges, iterations, src_col, dst_col, w_col, "markov_stationary"
     )
-    state_type = e_df.schema["src"].dataType.simpleString()
-    e = [(r["src"], r["dst"], int(r["c"])) for r in e_df.collect()]
-    schema = f"state {state_type}, pi_ppm long"
-    if not e:
-        return spark.createDataFrame([], schema=schema)
-    c_src: dict = {}
-    for s, _d, c in e:
-        c_src[s] = c_src.get(s, 0) + c
-    pmat = [(s, d, (c * 1_000_000) // c_src[s]) for s, d, c in e]
-    states = sorted({s for s, _, _ in e} | {d for _, d, _ in e})
-    r = len(states)
-    v = {s: 1_000_000 // r for s in states}
-    for _ in range(int(iterations)):
-        acc: dict = {}
-        for s, d, p in pmat:
-            acc[d] = acc.get(d, 0) + v[s] * p
-        v = {s: acc.get(s, 0) // 1_000_000 for s in states}
-    return spark.createDataFrame([(s, v[s]) for s in states], schema=schema)
+    return edges.sparkSession.createDataFrame(
+        [(s, v[s]) for s in states], schema=f"state {state_type}, pi_ppm long"
+    )
 
 
 def markov_entropy_rate(
@@ -1045,41 +1035,19 @@ def markov_entropy_rate(
     — so the sum Σ t_ij·q_ij is an exact integer in any order and
     h_nanos = (−Σ) div 1e6 releases bit-identically on both engines.
 
-    Scale shape: the |states|² matrix frame plus markov_stationary's
-    bounded rounds; after Spark reduces the corpus to the aggregated
-    edge list, the whole chain (matrix, stationary rounds, entropy sum)
-    finishes on the driver exactly like markov_stationary above — exact
-    Python integers, the identical ln quantization (floor(ln(p/1e6)·1e9
-    + 0.5) per DISTINCT EDGE before any multiplication), one Spark job
-    total.
+    Scale shape: markov_stationary's bounded driver finish, then the
+    entropy sum in exact Python integers over the same chain.
 
     Returns one row: (n_states, n_edges, h_nanos: long).
     """
     import math
 
-    spark = edges.sparkSession
-    e = [
-        (r["src"], r["dst"], int(r["c"]))
-        for r in edges.select(
-            F.col(src_col).alias("src"), F.col(dst_col).alias("dst"),
-            F.col(w_col).cast("long").alias("c"),
-        ).collect()
-    ]
+    states, pmat, v = _markov_chain(
+        edges, iterations, src_col, dst_col, w_col, "markov_entropy_rate"
+    )
     schema = "n_states long, n_edges long, h_nanos long"
-    c_src: dict = {}
-    for s, _d, c in e:
-        c_src[s] = c_src.get(s, 0) + c
-    pmat = [(s, d, (c * 1_000_000) // c_src[s]) for s, d, c in e]
-    states = sorted({s for s, _, _ in e} | {d for _, d, _ in e})
-    r = len(states)
-    if r == 0:
-        return spark.createDataFrame([(0, 0, None)], schema=schema)
-    v = {s: 1_000_000 // r for s in states}
-    for _ in range(int(iterations)):
-        acc: dict = {}
-        for s, d, p in pmat:
-            acc[d] = acc.get(d, 0) + v[s] * p
-        v = {s: acc.get(s, 0) // 1_000_000 for s in states}
+    if not states:
+        return edges.sparkSession.createDataFrame([(0, 0, None)], schema=schema)
     # p_ppm == 0 cells (c_src > 1e6*c at extreme skew) contribute 0 in the
     # x*ln(x) limit — filtered on BOTH engines, never fed to ln
     total = 0
@@ -1091,7 +1059,9 @@ def markov_entropy_rate(
             total += t * q
             n_edges += 1
     h_nanos = (0 - total) // 1_000_000 if n_edges else None
-    return spark.createDataFrame([(r, n_edges, h_nanos)], schema=schema)
+    return edges.sparkSession.createDataFrame(
+        [(len(states), n_edges, h_nanos)], schema=schema
+    )
 
 
 def bfs_hops(

@@ -26,6 +26,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..guards import collect_at_most
+
 # Exact-integer ppm inverse CDF of Poisson(1): cumulative thresholds
 # floor(P(X <= k) * 1e6). Weight = first k whose threshold exceeds the
 # uniform ppm draw; capped at 6 (P(X > 6) < 1e-4).
@@ -1058,63 +1060,50 @@ def bradley_terry(
     normalization (BT is scale-invariant; the floor spec above IS the
     contract).
 
-    Scale shape (the HITS round-4 lesson, graph.py:430): a pair table
-    within ``max_local_pairs`` runs all iterations in ONE single-task
-    mapInPandas stage on Python arbitrary-precision ints; past the bound
-    the same arithmetic runs as per-iteration decimal(38,0) join+groupBy
-    passes over the aggregated pairs — identical output by construction.
+    Scale shape: a pair table within ``max_local_pairs`` finishes on the
+    driver in Python arbitrary-precision ints (``guards.collect_at_most``);
+    past the bound the same arithmetic runs as per-iteration
+    decimal(38,0) join+groupBy passes over the aggregated pairs —
+    identical output by construction. Rows with a null winner or loser
+    are dropped first, on both paths.
     """
-    import pandas as pd
-
-    pw = pair_wins.groupBy(
-        F.col(winner_col).alias("pl_w"), F.col(loser_col).alias("pl_l")
-    ).agg(F.sum(F.col(w_col)).cast("long").alias("w"))
-    pw = pw.localCheckpoint(eager=True)
+    pw = (
+        pair_wins.filter(F.col(winner_col).isNotNull() & F.col(loser_col).isNotNull())
+        .groupBy(F.col(winner_col).alias("pl_w"), F.col(loser_col).alias("pl_l"))
+        .agg(F.sum(F.col(w_col)).cast("long").alias("w"))
+    )
     s = int(scale)
 
-    if pw.count() <= max_local_pairs:
-        pl_t = dict(pw.dtypes)["pl_w"]
-        schema = f"pl {pl_t}, wins long, n_matches long, p_micro long"
-
-        def run(batches):
-            frames = [b for b in batches if len(b)]
-            if not frames:
-                return
-            pdf = pd.concat(frames, ignore_index=True)
-            wins: dict = {}
-            npair: dict = {}
-            for a, b, w in zip(pdf["pl_w"], pdf["pl_l"], pdf["w"]):
-                w = int(w)
-                wins[a] = wins.get(a, 0) + w
-                wins.setdefault(b, 0)
-                key = (a, b) if a < b else (b, a)
-                npair[key] = npair.get(key, 0) + w
-            players = sorted(wins)
-            p = {v: s for v in players}
-            for _ in range(iterations):
-                denom = {v: 0 for v in players}
-                for (i, j), n in npair.items():
-                    t = (n * s) // max(p[i] + p[j], 1)
-                    denom[i] += t
-                    denom[j] += t
-                p = {
-                    v: (wins[v] * s * s) // max(denom[v], 1) for v in players
-                }
-            nm = {v: 0 for v in players}
+    rows = collect_at_most(pw, max_local_pairs, "bradley_terry")
+    if rows is not None:
+        wins: dict = {}
+        npair: dict = {}
+        for a, b, w in rows:
+            w = int(w)
+            wins[a] = wins.get(a, 0) + w
+            wins.setdefault(b, 0)
+            key = (a, b) if a < b else (b, a)
+            npair[key] = npair.get(key, 0) + w
+        players = sorted(wins)
+        p = {v: s for v in players}
+        for _ in range(iterations):
+            denom = {v: 0 for v in players}
             for (i, j), n in npair.items():
-                nm[i] += n
-                nm[j] += n
-            yield pd.DataFrame(
-                {
-                    "pl": players,
-                    "wins": [wins[v] for v in players],
-                    "n_matches": [nm[v] for v in players],
-                    "p_micro": [p[v] for v in players],
-                }
-            )
+                t = (n * s) // max(p[i] + p[j], 1)
+                denom[i] += t
+                denom[j] += t
+            p = {v: (wins[v] * s * s) // max(denom[v], 1) for v in players}
+        nm = {v: 0 for v in players}
+        for (i, j), n in npair.items():
+            nm[i] += n
+            nm[j] += n
+        return pw.sparkSession.createDataFrame(
+            [(v, wins[v], nm[v], p[v]) for v in players],
+            schema=f"pl {dict(pw.dtypes)['pl_w']}, wins long, n_matches long, "
+            "p_micro long",
+        )
 
-        return pw.coalesce(1).mapInPandas(run, schema)
-
+    pw = pw.localCheckpoint(eager=True)
     # distributed twin: identical floor arithmetic in decimal(38,0)
     np_ = (
         pw.select(

@@ -41,14 +41,6 @@ def punct_ratio(col) -> Column:
     return (n_punct / (F.length(c) + F.lit(DIVISION_GUARD_EPS))).cast("double")
 
 
-def stopword_ratio(col, lang: str = "en") -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    words = F.split(F.lower(F.trim(c)), r"\s+")
-    sw = F.array(*[F.lit(w) for w in LANG_STOPWORDS[lang]])
-    n_sw = F.size(F.filter(words, lambda w: F.array_contains(sw, w)))
-    return (n_sw / (F.size(words).cast("double") + F.lit(DIVISION_GUARD_EPS))).cast("double")
-
-
 def quality_score(col) -> Column:
     """Composite quality heuristic in [0,1]: length band + word length
     sanity + low punctuation noise (reference analog: the validator's

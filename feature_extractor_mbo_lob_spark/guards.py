@@ -11,13 +11,18 @@ never counted — debug mode stays cheap at any scale.
 
 Off by default: the flag is for soak tests, staging runs, and debugging
 "why did the driver OOM" reports, not the hot path.
+
+``collect_at_most`` is the one bounded driver finish: every operator that
+pulls a by-contract small frame onto the driver (to finish it in exact
+Python integers, or to broadcast it as an index) gets its rows there, and
+routes or raises when it returns None.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
 DEBUG_ENV = "SPARK_GRAFT_CHECK_BROADCASTS"
@@ -25,6 +30,23 @@ DEBUG_ENV = "SPARK_GRAFT_CHECK_BROADCASTS"
 
 def checks_enabled() -> bool:
     return os.environ.get(DEBUG_ENV, "") not in ("", "0")
+
+
+def collect_at_most(df: DataFrame, cap: int, what: str) -> list[Row] | None:
+    """All rows of ``df`` if it has at most ``cap`` of them, else None.
+
+    Exactly one action, ``df.limit(cap + 1).collect()``, whose Spark jobs
+    are described as ``what`` (so event logs show every bounded finish); the
+    caller's job description, e.g. a ``batch.JobHandle`` group's, is restored
+    afterwards."""
+    sc = df.sparkSession.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"collect_at_most[{what}] cap={cap}")
+    try:
+        rows = df.limit(cap + 1).collect()
+    finally:
+        sc.setJobDescription(prev)
+    return rows if len(rows) <= cap else None
 
 
 def assert_rows_at_most(df: DataFrame, bound: int, what: str) -> DataFrame:

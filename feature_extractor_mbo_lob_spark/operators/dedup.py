@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint
+from ..guards import collect_at_most
 
 
 def normalize_text(col) -> F.Column:
@@ -373,18 +374,13 @@ def connected_components(
     """
     e_sel = edges.select(
         F.col(id_a).cast("long").alias("src"), F.col(id_b).cast("long").alias("dst")
-    )
-    # r6 auto-route: near-dup pair sets are usually a small fraction of the
-    # corpus. Up to ``collect_threshold`` pairs (~32 MB of longs — the
-    # brute_force_topk bounded-collect discipline) the components are
-    # computed exactly on the driver with union-find: min-label CC is a
-    # pure function of the edge set, so the output is identical to the
-    # iterative path, for ONE driver action instead of 2 per round. Larger
-    # pair sets continue to the distributed Pregel-style loop (the 100-TB
-    # path, unchanged — it re-materializes the pair pipeline once, the
-    # price of the route probe).
-    head = e_sel.take(collect_threshold + 1)
-    if len(head) <= collect_threshold:
+    ).filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
+    # Route: up to ``collect_threshold`` pairs (~32 MB of longs) the
+    # components come from driver union-find (guards.collect_at_most) —
+    # min-label CC is a pure function of the edge set, so the output equals
+    # the Pregel-style loop below, which larger pair sets take unchanged.
+    head = collect_at_most(e_sel, collect_threshold, "connected_components")
+    if head is not None:
         parent: dict[int, int] = {}
 
         def find(x: int) -> int:

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..guards import collect_at_most
 from .dedup import connected_components
 
 NOISE = -1
@@ -216,10 +217,10 @@ def exact_eps_pairs(
     sampled-truth baseline behind ``neighbor_recall``. Quadratic IN THE
     INPUT, so callers pass a bounded sample (the meter's cost is set by
     the sample size, independent of corpus size), never the corpus.
-    The gemm path materializes the sample on the driver as the broadcast
-    index, so it FAILS FAST (clear error, not a silent OOM) past
-    ``max_broadcast_rows`` — at that size use a larger ``sample_buckets``
-    in the caller or ``method="join"`` (fully distributed).
+    The gemm path collects the sample as its broadcast index via
+    ``guards.collect_at_most`` and raises past ``max_broadcast_rows`` —
+    at that size use a larger ``sample_buckets`` in the caller or
+    ``method="join"`` (fully distributed).
 
     ``method="gemm"``: collect the (sampled) quantized matrix as a
     broadcast index (the similarity.py brute-force pattern) and evaluate
@@ -248,14 +249,13 @@ def exact_eps_pairs(
             .select("id_a", "id_b")
         )
 
-    n_sample = e.count()
-    if n_sample > max_broadcast_rows:
+    rows = collect_at_most(e.select("id", "v"), max_broadcast_rows, "exact_eps_pairs")
+    if rows is None:
         raise ValueError(
-            f"exact_eps_pairs gemm path: sample has {n_sample} rows > "
-            f"max_broadcast_rows={max_broadcast_rows}; raise the caller's "
+            f"exact_eps_pairs gemm path: sample has more than "
+            f"max_broadcast_rows={max_broadcast_rows} rows; raise the caller's "
             "sample_buckets or use method='join' (distributed)."
         )
-    rows = e.select("id", "v").collect()
     if not rows:
         return e.sparkSession.createDataFrame([], "id_a long, id_b long")
     rows.sort(key=lambda r: r[0])

@@ -23,10 +23,6 @@ from ..config import PipelineConfig
 from . import ordering
 
 
-def _epoch_us(cfg):
-    return ordering.epoch_us(cfg.ts_col)
-
-
 def tool_episodes(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """One row per invocation: (conv_id, tool, episode_rank, invoke_turn_idx,
     invoke_ts, result_turn_idx?, result_ts?, latency_s?, gap_turns?,

@@ -44,12 +44,6 @@ def forward(cfg: PipelineConfig, lo: int, hi: int) -> WindowSpec:
     return stable_window(cfg).rowsBetween(lo, hi)
 
 
-def with_turn_pos(df: DataFrame, cfg: PipelineConfig, col: str = "turn_pos") -> DataFrame:
-    """Dense 0-based position under the stable order (equals turn_idx when
-    the input is already dense, but the engine never assumes that)."""
-    return df.withColumn(col, (F.row_number().over(stable_window(cfg)) - 1).cast("long"))
-
-
 def assert_monotone_ts(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Audit column flagging timestamp regressions under the stable order
     (reference: validate_timestamps, src/lib.rs:132-134)."""

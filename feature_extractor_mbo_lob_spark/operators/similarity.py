@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..contract import DIVISION_GUARD_EPS
+from ..guards import collect_at_most
 
 _BLOCK = 1024  # query rows per GEMM block (bounds the score matrix memory)
 
@@ -67,23 +68,25 @@ def _collect_corpus(
     df: DataFrame,
     id_col: str,
     vec_col: str,
-    max_broadcast_rows: int | None = MAX_BROADCAST_ROWS,
+    max_broadcast_rows: int = MAX_BROADCAST_ROWS,
+    on_oversize: str = "raise",
+    what: str = "exact GEMM path",
 ):
-    """Corpus as (sorted ids, float64 matrix, norms) — a broadcastable index.
-
-    Counts BEFORE collecting and raises past ``max_broadcast_rows`` (pass
-    None only when the caller has already counted and routed)."""
-    if max_broadcast_rows is not None:
-        n = df.count()
-        if n > max_broadcast_rows:
-            raise ValueError(
-                f"exact GEMM path: corpus has {n} rows > max_broadcast_rows="
-                f"{max_broadcast_rows}; this would collect+broadcast the whole "
-                "corpus onto the driver. Use ivf_topk / hyperplane_near_dup "
-                "(bucketed scale paths), method='join' (distributed), or "
-                "raise max_broadcast_rows if the driver really has the memory."
-            )
-    rows = df.select(id_col, vec_col).collect()
+    """Corpus as (sorted ids, float64 matrix, norms) — a broadcastable index
+    from one bounded collect (``guards.collect_at_most``). Past
+    ``max_broadcast_rows`` it returns None when ``on_oversize='route'``
+    (the caller takes its bucketed scale path) and raises otherwise."""
+    rows = collect_at_most(df.select(id_col, vec_col), max_broadcast_rows, what)
+    if rows is None:
+        if on_oversize == "route":
+            return None
+        raise ValueError(
+            f"{what}: corpus has more than max_broadcast_rows="
+            f"{max_broadcast_rows} rows; this would collect+broadcast the whole "
+            "corpus onto the driver. Use ivf_topk / hyperplane_near_dup "
+            "(bucketed scale paths), method='join' (distributed), or "
+            "raise max_broadcast_rows if the driver really has the memory."
+        )
     rows.sort(key=lambda r: r[0])
     ids = np.array([r[0] for r in rows])
     M = np.array([list(r[1]) for r in rows], dtype=np.float64)
@@ -164,21 +167,17 @@ def brute_force_topk(
         return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
     spark = df.sparkSession
-    n_corpus = df.count()
-    if n_corpus > max_broadcast_rows:
-        if on_oversize == "route" and query is None:
-            return ivf_topk(
-                df, id_col, vec_col, k=k,
-                n_centroids=max(int(n_corpus ** 0.5), 16),
-                max_cluster_rows=max_broadcast_rows,
-            )
-        raise ValueError(
-            f"brute_force_topk matrix path: corpus has {n_corpus} rows > "
-            f"max_broadcast_rows={max_broadcast_rows}. Use ivf_topk (bucketed "
-            "scale path), method='join' (distributed), or raise the cap."
+    index = _collect_corpus(
+        df, id_col, vec_col, max_broadcast_rows,
+        on_oversize if query is None else "raise", "brute_force_topk",
+    )
+    if index is None:
+        return ivf_topk(
+            df, id_col, vec_col, k=k,
+            n_centroids=max(int(df.count() ** 0.5), 16),
+            max_cluster_rows=max_broadcast_rows,
         )
-    ids, M, norms = _collect_corpus(df, id_col, vec_col, max_broadcast_rows=None)
-    bc = spark.sparkContext.broadcast((ids, M, norms))
+    bc = spark.sparkContext.broadcast(index)
     qdf = (query if query is not None else df).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
     )
@@ -233,18 +232,12 @@ def near_dup_pairs(
         )
 
     spark = df.sparkSession
-    n_corpus = df.count()
-    if n_corpus > max_broadcast_rows:
-        if on_oversize == "route":
-            return hyperplane_near_dup(df, id_col, vec_col, threshold=threshold)
-        raise ValueError(
-            f"near_dup_pairs matrix path: corpus has {n_corpus} rows > "
-            f"max_broadcast_rows={max_broadcast_rows}. Use hyperplane_near_dup/"
-            "ivf_near_dup (bucketed scale paths), method='join' (distributed), "
-            "or raise the cap."
-        )
-    ids, M, norms = _collect_corpus(df, id_col, vec_col, max_broadcast_rows=None)
-    bc = spark.sparkContext.broadcast((ids, M, norms))
+    index = _collect_corpus(
+        df, id_col, vec_col, max_broadcast_rows, on_oversize, "near_dup_pairs"
+    )
+    if index is None:
+        return hyperplane_near_dup(df, id_col, vec_col, threshold=threshold)
+    bc = spark.sparkContext.broadcast(index)
     qdf = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_qv"))
     id_type = dict(df.dtypes)[id_col]
     schema = f"id_a {id_type}, id_b {id_type}, cos double"

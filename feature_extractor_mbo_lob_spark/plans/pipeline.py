@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from .. import contract
 from ..config import PipelineConfig
 from ..labeling import tlob_labels
-from ..operators import ordering, rolling, state
+from ..operators import rolling, state
 
 
 def r6(c):
@@ -82,14 +82,6 @@ def build_features(df: DataFrame, cfg: PipelineConfig, validate: bool = True,
     if validate:
         contract.validate_feature_frame(df.columns, cfg.window_sizes)
     return df
-
-
-def sample_anchors(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Event-based sampler: keep every Nth turn per conversation
-    (reference: EventBasedSampler, src/preprocessing/sampling.rs:253-330)."""
-    w = ordering.stable_window(cfg)
-    df = df.withColumn("_rn", F.row_number().over(w))
-    return df.filter(F.pmod(F.col("_rn"), F.lit(cfg.sample_every_n)) == 0).drop("_rn")
 
 
 def max_conv_turns(df: DataFrame) -> int:

@@ -61,28 +61,6 @@ def monotonicity_violations(df: DataFrame, cfg: PipelineConfig) -> int:
     )
 
 
-def audit_report(df: DataFrame, cfg: PipelineConfig, feature_cols: list[str]) -> dict:
-    """One-pass audit summary recorded into lineage manifests."""
-    aggs = [
-        F.count(F.lit(1)).alias("rows"),
-        F.countDistinct(cfg.key_col).alias("keys"),
-    ]
-    for c in feature_cols:
-        aggs.append(
-            F.sum(
-                (F.isnan(c) | F.col(c).isNull() | (F.abs(F.col(c)) == float("inf"))).cast("long")
-            ).alias(f"bad_{c}")
-        )
-    row = df.agg(*aggs).collect()[0]
-    bad = {c: int(row[f"bad_{c}"] or 0) for c in feature_cols}
-    return {
-        "rows": int(row["rows"]),
-        "keys": int(row["keys"]),
-        "bad_value_columns": {c: n for c, n in bad.items() if n > 0},
-        "monotonicity_violations": monotonicity_violations(df, cfg),
-    }
-
-
 def profile_table(df, cols: list[str] | None = None):
     """Deequ-style single-pass data profile: per column, the row count,
     null count, distinct count, and numeric min/max — the completeness /

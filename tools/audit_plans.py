@@ -841,15 +841,16 @@ def main() -> None:
 
     edges = word_transition_edges(docs, buckets=8)
     sections.append(summarize(
-        "HITS hubs/authorities (bounded fast path, single task)",
+        "HITS hubs/authorities (bounded fast path, driver finish)",
         hits_int(edges, iterations=3),
         "The aggregated bucket graph is O(buckets^2) rows by construction, "
-        "under max_local_edges — ALL iterations run in ONE coalesce(1) "
-        "mapInPandas stage with Python arbitrary-precision ints (the "
-        "hugeint contract exactly). One task total; no per-iteration "
-        "join/shuffle ladder.",
-        forbid=("CartesianProduct", "BatchEvalPython",
-                "FlatMapGroupsInPandas"),
+        "under max_local_edges — it is collected once "
+        "(guards.collect_at_most) and ALL iterations run on the driver in "
+        "Python arbitrary-precision ints (the hugeint contract exactly). "
+        "The result is a driver-built local relation: no stage, no Python "
+        "worker, no per-iteration join/shuffle ladder.",
+        forbid=("CartesianProduct", "BatchEvalPython", "Exchange",
+                "FlatMapGroupsInPandas", "MapInPandas"),
     ))
 
     sections.append(summarize(
@@ -1069,14 +1070,15 @@ def main() -> None:
         F.count(F.lit(1)).cast("long").alias("w"),
     ).filter(F.col("winner") != F.col("loser"))
     sections.append(summarize(
-        "Bradley-Terry MM fit (bounded fast path, single task)",
+        "Bradley-Terry MM fit (bounded fast path, driver finish)",
         bradley_terry(bt_pairs),
         "Input is the AGGREGATED O(players^2) win table; within "
-        "max_local_pairs ALL MM iterations run in one coalesce(1) "
-        "mapInPandas stage on Python arbitrary-precision ints (the "
-        "hugeint contract). The HITS round-4 pattern.",
-        forbid=("CartesianProduct", "BatchEvalPython",
-                "FlatMapGroupsInPandas"),
+        "max_local_pairs it is collected once (guards.collect_at_most) and "
+        "ALL MM iterations run on the driver in Python arbitrary-precision "
+        "ints (the hugeint contract). The result is a driver-built local "
+        "relation, the same shape as the HITS fast path.",
+        forbid=("CartesianProduct", "BatchEvalPython", "Exchange",
+                "FlatMapGroupsInPandas", "MapInPandas"),
     ))
 
     sections.append(summarize(
