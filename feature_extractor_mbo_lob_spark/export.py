@@ -205,21 +205,26 @@ def export_npy_sequences(
     import numpy as np
 
     cols = ["sequence"] + ([label_col] if label_col else [])
-    rows = collect_at_most(seq_df.select(*cols), max_rows, "export_npy_sequences")
-    if rows is None:
+    pdf = collect_at_most(
+        seq_df.select(*cols), max_rows, "export_npy_sequences", to_pandas=True
+    )
+    if pdf is None:
         raise ValueError(f"npy export capped at {max_rows} rows; got more")
-    seqs = np.array([[list(vec) for vec in r[0]] for r in rows], dtype=np.float32)
+    # explicit [N][T][F] nesting — Arrow may hand back ragged object arrays
+    seqs = np.array(
+        [[list(vec) for vec in s] for s in pdf["sequence"]], dtype=np.float32
+    )
     out = Path(out_dir)
     out.mkdir(parents=True, exist_ok=True)
     np.save(out / f"{tag}_sequences.npy", seqs)
     meta = {
         "shape": list(seqs.shape),
         "dtype": "float32",
-        "rows": len(rows),
+        "rows": len(pdf),
         "written_at_unix": time.time(),
     }
     if label_col:
-        labels = np.array([r[1] for r in rows], dtype=np.int8)
+        labels = pdf[label_col].to_numpy(dtype=np.int8)
         np.save(out / f"{tag}_labels.npy", labels)
         meta["labels_shape"] = list(labels.shape)
         meta["labels_dtype"] = "int8"

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import os
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
@@ -32,18 +33,26 @@ def checks_enabled() -> bool:
     return os.environ.get(DEBUG_ENV, "") not in ("", "0")
 
 
-def collect_at_most(df: DataFrame, cap: int, what: str) -> list[Row] | None:
+def collect_at_most(
+    df: DataFrame, cap: int, what: str, to_pandas: bool = False
+) -> list[Row] | pd.DataFrame | None:
     """All rows of ``df`` if it has at most ``cap`` of them, else None.
 
-    Exactly one action, ``df.limit(cap + 1).collect()``, whose Spark jobs
-    are described as ``what`` (so event logs show every bounded finish); the
-    caller's job description, e.g. a ``batch.JobHandle`` group's, is restored
-    afterwards."""
+    Exactly one action, ``df.limit(cap + 1).collect()`` (``.toPandas()``,
+    i.e. Arrow, with ``to_pandas``), whose Spark jobs are described as
+    ``what`` (so event logs show every bounded finish); the caller's job
+    description, e.g. a ``batch.JobHandle`` group's, is restored afterwards.
+
+    Past the cap, cap + 1 rows still reach the driver, so this is only for
+    frames whose cap + 1 rows fit there. A frame of wide rows (a vector
+    corpus) is sized first with a column-free ``count()`` and collected
+    only within its cap."""
     sc = df.sparkSession.sparkContext
     prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(f"collect_at_most[{what}] cap={cap}")
     try:
-        rows = df.limit(cap + 1).collect()
+        head = df.limit(cap + 1)
+        rows = head.toPandas() if to_pandas else head.collect()
     finally:
         sc.setJobDescription(prev)
     return rows if len(rows) <= cap else None

@@ -217,10 +217,11 @@ def exact_eps_pairs(
     sampled-truth baseline behind ``neighbor_recall``. Quadratic IN THE
     INPUT, so callers pass a bounded sample (the meter's cost is set by
     the sample size, independent of corpus size), never the corpus.
-    The gemm path collects the sample as its broadcast index via
-    ``guards.collect_at_most`` and raises past ``max_broadcast_rows`` —
-    at that size use a larger ``sample_buckets`` in the caller or
-    ``method="join"`` (fully distributed).
+    The gemm path counts the sample, then collects it as its broadcast
+    index (``guards.collect_at_most``), so it FAILS FAST (clear error, not
+    a silent OOM) past ``max_broadcast_rows`` — at that size use a larger
+    ``sample_buckets`` in the caller or ``method="join"`` (fully
+    distributed).
 
     ``method="gemm"``: collect the (sampled) quantized matrix as a
     broadcast index (the similarity.py brute-force pattern) and evaluate
@@ -249,11 +250,15 @@ def exact_eps_pairs(
             .select("id_a", "id_b")
         )
 
-    rows = collect_at_most(e.select("id", "v"), max_broadcast_rows, "exact_eps_pairs")
+    # vector rows are wide: size the sample column-free before collecting it
+    n_sample = e.count()
+    rows = None
+    if n_sample <= max_broadcast_rows:
+        rows = collect_at_most(e.select("id", "v"), max_broadcast_rows, "exact_eps_pairs")
     if rows is None:
         raise ValueError(
-            f"exact_eps_pairs gemm path: sample has more than "
-            f"max_broadcast_rows={max_broadcast_rows} rows; raise the caller's "
+            f"exact_eps_pairs gemm path: sample has {n_sample} rows > "
+            f"max_broadcast_rows={max_broadcast_rows}; raise the caller's "
             "sample_buckets or use method='join' (distributed)."
         )
     if not rows:

@@ -69,20 +69,23 @@ def _collect_corpus(
     id_col: str,
     vec_col: str,
     max_broadcast_rows: int = MAX_BROADCAST_ROWS,
-    on_oversize: str = "raise",
+    n: int | None = None,
     what: str = "exact GEMM path",
 ):
-    """Corpus as (sorted ids, float64 matrix, norms) — a broadcastable index
-    from one bounded collect (``guards.collect_at_most``). Past
-    ``max_broadcast_rows`` it returns None when ``on_oversize='route'``
-    (the caller takes its bucketed scale path) and raises otherwise."""
-    rows = collect_at_most(df.select(id_col, vec_col), max_broadcast_rows, what)
+    """Corpus as (sorted ids, float64 matrix, norms) — a broadcastable index.
+
+    Vector rows are wide, so the corpus is sized first with a column-free
+    ``count()`` (pass ``n`` when the caller has counted it to route) and
+    its rows are collected (``guards.collect_at_most``) only within
+    ``max_broadcast_rows``; past it this raises with the routing hint."""
+    n = df.count() if n is None else n
+    rows = None
+    if n <= max_broadcast_rows:
+        rows = collect_at_most(df.select(id_col, vec_col), max_broadcast_rows, what)
     if rows is None:
-        if on_oversize == "route":
-            return None
         raise ValueError(
-            f"{what}: corpus has more than max_broadcast_rows="
-            f"{max_broadcast_rows} rows; this would collect+broadcast the whole "
+            f"{what}: corpus has {n} rows > max_broadcast_rows="
+            f"{max_broadcast_rows}; this would collect+broadcast the whole "
             "corpus onto the driver. Use ivf_topk / hyperplane_near_dup "
             "(bucketed scale paths), method='join' (distributed), or "
             "raise max_broadcast_rows if the driver really has the memory."
@@ -167,17 +170,18 @@ def brute_force_topk(
         return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
     spark = df.sparkSession
-    index = _collect_corpus(
-        df, id_col, vec_col, max_broadcast_rows,
-        on_oversize if query is None else "raise", "brute_force_topk",
-    )
-    if index is None:
+    n_corpus = df.count()
+    if n_corpus > max_broadcast_rows and on_oversize == "route" and query is None:
         return ivf_topk(
             df, id_col, vec_col, k=k,
-            n_centroids=max(int(df.count() ** 0.5), 16),
+            n_centroids=max(int(n_corpus ** 0.5), 16),
             max_cluster_rows=max_broadcast_rows,
         )
-    bc = spark.sparkContext.broadcast(index)
+    bc = spark.sparkContext.broadcast(
+        _collect_corpus(
+            df, id_col, vec_col, max_broadcast_rows, n_corpus, "brute_force_topk"
+        )
+    )
     qdf = (query if query is not None else df).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
     )
@@ -232,12 +236,14 @@ def near_dup_pairs(
         )
 
     spark = df.sparkSession
-    index = _collect_corpus(
-        df, id_col, vec_col, max_broadcast_rows, on_oversize, "near_dup_pairs"
-    )
-    if index is None:
+    n_corpus = df.count()
+    if n_corpus > max_broadcast_rows and on_oversize == "route":
         return hyperplane_near_dup(df, id_col, vec_col, threshold=threshold)
-    bc = spark.sparkContext.broadcast(index)
+    bc = spark.sparkContext.broadcast(
+        _collect_corpus(
+            df, id_col, vec_col, max_broadcast_rows, n_corpus, "near_dup_pairs"
+        )
+    )
     qdf = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_qv"))
     id_type = dict(df.dtypes)[id_col]
     schema = f"id_a {id_type}, id_b {id_type}, cos double"

@@ -7,6 +7,8 @@
   degenerate rows included (null endpoints, a zero-out-weight source).
 * Guards: the operators that always finish on the driver raise a
   ValueError naming themselves past their module-level cap.
+* Vector corpora (GEMM index, DBSCAN sample) are sized column-free and
+  never collected past their cap, whether they route or raise.
 * libm boundary: the driver's floor(x·1e9 + 0.5) nano quantization of
   ln-terms equals DuckDB evaluating the oracle SQL on cells whose x·1e9
   sits at (or, where no such cell exists, nearest to) a .5 boundary.
@@ -19,7 +21,7 @@ from pyspark.sql import functions as F
 
 from feature_extractor_mbo_lob_spark import guards
 from feature_extractor_mbo_lob_spark.functions import evalmetrics, graph, stats
-from feature_extractor_mbo_lob_spark.operators import dedup
+from feature_extractor_mbo_lob_spark.operators import dedup, density, similarity
 
 # ---------------------------------------------------------------------------
 # collect_at_most
@@ -32,6 +34,8 @@ def test_collect_at_most_rows_up_to_cap_none_past(spark):
     assert guards.collect_at_most(df, 4, "t") is None
     assert guards.collect_at_most(df.filter("id < 0"), 0, "t") == []
     assert guards.collect_at_most(df, 0, "t") is None
+    assert sorted(guards.collect_at_most(df, 5, "t", to_pandas=True).id) == list(range(5))
+    assert guards.collect_at_most(df, 4, "t", to_pandas=True) is None
 
 
 def test_collect_at_most_restores_job_description(spark):
@@ -136,6 +140,39 @@ def test_driver_finish_raises_past_cap(spark, monkeypatch, module, cap, fn):
     monkeypatch.setattr(module, cap, 0)
     with pytest.raises(ValueError, match=fn):
         getattr(module, fn)(*args)
+
+
+# ---------------------------------------------------------------------------
+# vector corpora: sized column-free, never collected past the cap
+# ---------------------------------------------------------------------------
+
+
+def test_vector_corpus_not_collected_past_cap(spark, monkeypatch):
+    vecs = spark.createDataFrame(
+        [(i, [1.0, float(i), 0.5]) for i in range(6)],
+        "vec_id long, embedding array<double>",
+    )
+    sample = vecs.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v"))
+    calls = []
+
+    def spy(df, cap, what, **kw):
+        calls.append(what)
+        return guards.collect_at_most(df, cap, what, **kw)
+
+    monkeypatch.setattr(similarity, "collect_at_most", spy)
+    monkeypatch.setattr(density, "collect_at_most", spy)
+    similarity.brute_force_topk(vecs, k=2, max_broadcast_rows=3).collect()
+    similarity.near_dup_pairs(vecs, threshold=0.9, max_broadcast_rows=3).collect()
+    for fn in (similarity.brute_force_topk, similarity.near_dup_pairs):
+        with pytest.raises(ValueError, match="max_broadcast_rows=3"):
+            fn(vecs, max_broadcast_rows=3, on_oversize="raise")
+    with pytest.raises(ValueError, match="max_broadcast_rows=3"):
+        density.exact_eps_pairs(sample, 10**5, max_broadcast_rows=3)
+    assert calls == []
+    # within the cap the same entrypoints do collect through the spy
+    similarity.brute_force_topk(vecs, k=2, max_broadcast_rows=6).collect()
+    density.exact_eps_pairs(sample, 10**5, max_broadcast_rows=6).collect()
+    assert calls == ["brute_force_topk", "exact_eps_pairs"]
 
 
 # ---------------------------------------------------------------------------
