@@ -4,10 +4,9 @@ A web-scale curation pipeline ranks sources/domains by link structure
 (quality weighting, crawl prioritization, spam demotion). The synthetic
 corpus carries no hyperlinks, so the graph here is the word-bucket
 transition digraph — consecutive-token transitions hashed into a fixed
-set of bucket nodes — which exercises the identical distributed shape:
-an edge-list aggregation (groupBy with map-side combine, O(buckets^2)
-result regardless of corpus size) followed by iterative
-rank-propagation joins.
+set of bucket nodes: an edge-list aggregation (groupBy with map-side
+combine, O(buckets^2) result regardless of corpus size) followed by
+fixed rank-propagation rounds.
 
 PageRank is computed in INTEGER micro-units end to end: ranks are int64
 (sum ~ `scale`), every division is floor integer division, damping is
@@ -18,13 +17,10 @@ hash-for-hash. Mass lost to floor() and to dangling nodes is part of
 the deterministic spec, not an approximation bug.
 
 Scale shape (100 TB): the edge list never leaves O(buckets^2) rows after
-the first aggregation; each iteration is one broadcast-sized join
-(ranks) against the aggregated edge table plus one groupBy over dst —
-no per-document work after edge extraction. For a real web graph
-(billions of nodes) the same loop holds with ranks as a full DataFrame
-and the join shuffling on node id; iterations are plan-chained (use
-localCheckpoint every ~5 rounds to bound lineage, as operators/dedup.py
-does for connected components).
+the first aggregation, so the rounds finish on the driver in exact
+Python integers after one bounded collect (``_collect_edges``, cap
+``MAX_DRIVER_EDGES``, ValueError past it) — no per-document work after
+edge extraction.
 """
 
 from __future__ import annotations
@@ -33,6 +29,24 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from ..guards import collect_at_most
 from ..operators.dedup import normalize_text
+
+# Edge lists the graph finishes collect to the driver (pagerank_int,
+# hits_int, the Markov chain); every caller passes an aggregated bucket,
+# role or tool graph, O(nodes²) rows by construction.
+MAX_DRIVER_EDGES = 200_000
+
+
+def _collect_edges(edges: DataFrame, what: str) -> list:
+    """All rows of a small edge list (``guards.collect_at_most``), or a
+    ValueError naming ``what`` past ``MAX_DRIVER_EDGES``."""
+    rows = collect_at_most(edges, MAX_DRIVER_EDGES, what)
+    if rows is None:
+        raise ValueError(
+            f"{what}: more than MAX_DRIVER_EDGES={MAX_DRIVER_EDGES} edges; "
+            "the graph finishes on the driver, so coarsen the nodes before "
+            "calling."
+        )
+    return rows
 
 
 def _bucket(c: F.Column, buckets: int) -> F.Column:
@@ -98,99 +112,55 @@ def pagerank_int(
     scale: int = 1_000_000,
     damping_num: int = 17,
     damping_den: int = 20,
-    max_driver_edges: int = 200_000,
 ) -> DataFrame:
     """Weighted PageRank over an edge list, integer micro-unit arithmetic.
 
     r_0(v) = scale DIV N for the N distinct nodes; each round
     r_{t+1}(v) = (scale * (den-num)) DIV (den * N)
                  + (num * sum_{u->v} ((r_t(u) * w(u,v)) DIV W(u))) DIV den
-    with W(u) the total out-weight of u. Every op is int64 floor
-    division on positive operands (Spark ``div`` == DuckDB ``//`` for
-    positives), so results are engine-exact. Dangling-node mass is
-    dropped (documented spec). Degenerate input, identical on both
-    branches: edges with a null endpoint are dropped; a source whose
-    total out-weight is 0 contributes 0 (DuckDB ``// 0`` is NULL) and
-    still counts in N.
+    with W(u) the total out-weight of u. Every op is integer floor
+    division on non-negative operands (Python ``//`` == DuckDB ``//``),
+    so results are engine-exact. Dangling-node mass is dropped
+    (documented spec). Degenerate input: edges with a null endpoint are
+    dropped; a source whose total out-weight is 0 contributes 0 (DuckDB
+    ``// 0`` is NULL) and still counts in N.
 
-    Bounded fast path: an edge list within ``max_driver_edges`` (every
-    bucket graph is O(buckets²) rows) finishes on the driver in exact
-    Python integers (``guards.collect_at_most``). Past the cap the
-    distributed loop below runs: the edge list and node set are
-    localCheckpoint-ed once so the unrolled rounds don't re-derive the
-    edge lineage; rank frames stay plan-chained (eager per-round
-    checkpoints were measured 40% slower on the 6.7M-edge turn graph).
+    Scale shape: the edge list (every bucket graph is O(buckets²) rows)
+    finishes on the driver in exact Python integers (``_collect_edges``,
+    cap ``MAX_DRIVER_EDGES``, ValueError past it).
 
     Returns ``DataFrame[node: string, rank_micro: long]``.
     """
     edges = edges.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-    rows = collect_at_most(
+    rows = _collect_edges(
         edges.select("src", "dst", F.col("w").cast("long").alias("w")),
-        max_driver_edges, "pagerank_int",
+        "pagerank_int",
     )
-    if rows is not None:
-        spark = edges.sparkSession
-        node_type = edges.schema["src"].dataType.simpleString()
-        e = [(r["src"], r["dst"], int(r["w"])) for r in rows]
-        schema = f"node {node_type}, rank_micro long"
-        if not e:
-            return spark.createDataFrame([], schema=schema)
-        out_w: dict = {}
-        for s, _d, w in e:
-            out_w[s] = out_w.get(s, 0) + w
-        node_set = sorted({s for s, _, _ in e} | {d for _, d, _ in e})
-        n = len(node_set)
-        base = (scale * (damping_den - damping_num)) // (damping_den * n)
-        rank = {v: scale // n for v in node_set}
-        for _ in range(int(iterations)):
-            acc: dict = {}
-            for s, d, w in e:
-                if out_w[s]:
-                    acc[d] = acc.get(d, 0) + (rank[s] * w) // out_w[s]
-            rank = {
-                v: base + (damping_num * acc.get(v, 0)) // damping_den
-                for v in node_set
-            }
-        return spark.createDataFrame(
-            [(v, rank[v]) for v in node_set], schema=schema
-        )
-    edges = edges.localCheckpoint(eager=True)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    ).localCheckpoint(eager=True)
-    n = nodes.count()
-    if n == 0:
-        return nodes.withColumn("rank_micro", F.lit(0).cast("long"))
-    outw = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
-    ew = edges.join(outw, "src").localCheckpoint(eager=True)  # src, dst, w, out_w
+    spark = edges.sparkSession
+    node_type = edges.schema["src"].dataType.simpleString()
+    e = [(r["src"], r["dst"], int(r["w"])) for r in rows]
+    schema = f"node {node_type}, rank_micro long"
+    if not e:
+        return spark.createDataFrame([], schema=schema)
+    out_w: dict = {}
+    for s, _d, w in e:
+        out_w[s] = out_w.get(s, 0) + w
+    node_set = sorted({s for s, _, _ in e} | {d for _, d, _ in e})
+    n = len(node_set)
     base = (scale * (damping_den - damping_num)) // (damping_den * n)
-
-    ranks = nodes.withColumn("rank_micro", F.lit(scale // n).cast("long"))
-    for _ in range(iterations):
-        contrib = (
-            ew.join(ranks, ew["src"] == ranks["node"])
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("(rank_micro * w) div nullif(out_w, 0)").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("c_sum"))
-        )
-        ranks = (
-            nodes.join(contrib, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.expr(
-                        f"({damping_num} * coalesce(c_sum, 0)) div {damping_den}"
-                    )
-                ).cast("long").alias("rank_micro"),
-            )
-        )
-    return ranks
+    rank = {v: scale // n for v in node_set}
+    for _ in range(int(iterations)):
+        acc: dict = {}
+        for s, d, w in e:
+            if out_w[s]:
+                acc[d] = acc.get(d, 0) + (rank[s] * w) // out_w[s]
+        rank = {
+            v: base + (damping_num * acc.get(v, 0)) // damping_den
+            for v in node_set
+        }
+    return spark.createDataFrame(
+        [(v, rank[v]) for v in node_set], schema=schema
+    )
 
 
 def triangle_stats(edges: DataFrame, a_col: str = "a", b_col: str = "b") -> DataFrame:
@@ -327,19 +297,6 @@ def _turn_pair_weights(
     return pairs
 
 
-def turn_similarity_edges(
-    t: DataFrame, min_shared: int = 1, max_word_turn_df: int | None = None
-) -> DataFrame:
-    """String-node edge-list view of ``_turn_pair_weights`` (both directions,
-    node ids ``conv_id#turn_idx``) — the generic-graph form pagerank_int /
-    hits_int consume. Returns ``DataFrame[src, dst, w: long]``."""
-    pairs = _turn_pair_weights(t, min_shared, max_word_turn_df)
-    node = lambda c, ti: F.concat_ws("#", F.col(c), F.col(ti).cast("string"))
-    fwd = pairs.select(node("conv_id", "ta").alias("src"), node("conv_id", "tb").alias("dst"), "w")
-    rev = pairs.select(node("conv_id", "tb").alias("src"), node("conv_id", "ta").alias("dst"), "w")
-    return fwd.unionAll(rev)
-
-
 def textrank_turns(
     t: DataFrame,
     iterations: int = 2,
@@ -365,11 +322,11 @@ def textrank_turns(
     Plan shape: conversations are DISJOINT graph components, so the whole
     rank iteration runs vectorized inside ONE applyInPandas over conv_id —
     numpy int64 floor division replicating pagerank_int's update exactly
-    (bit-identical output, asserted by tests). The generic join-per-round
-    pagerank_int plan (3 eager checkpoints + 2 joins/round) cost ~8 s warm
-    and ~20 s cold on the 1.4M-edge sf0.1 graph; this path is one shuffle
-    after the edge build. The per-conv group size is bounded by the
-    ``max_word_turn_df`` cap exactly as the old pair fan-out was.
+    (bit-identical output, asserted by tests). pagerank_int finishes on
+    the driver within ``MAX_DRIVER_EDGES``; the 1.4M-edge sf0.1 turn
+    graph is past it, and this path is one shuffle after the edge build.
+    The per-conv group size is bounded by the ``max_word_turn_df`` cap
+    exactly as the old pair fan-out was.
 
     Returns ``DataFrame[conv_id, turn_idx, rank_micro: long, pos: int]``.
     """
@@ -427,16 +384,43 @@ def textrank_turns(
     return pairs.groupBy("conv_id").applyInPandas(per_conv, schema)
 
 
-def _hits_int_local(rows, iterations: int, scale: int) -> list[tuple]:
-    """HITS over a collected edge list in Python arbitrary-precision ints —
-    the exact hugeint/decimal(38,0) arithmetic of the distributed path
-    (same floor divisions, same greatest(tot, 1) guard), never a float."""
+def hits_int(
+    edges: DataFrame,
+    iterations: int = 3,
+    scale: int = 1_000_000,
+) -> DataFrame:
+    """HITS hubs & authorities (Kleinberg, JACM 1999) in integer
+    micro-units — the link-analysis complement to pagerank_int for
+    crawl-frontier scoring (a good HUB links to many good authorities;
+    a good AUTHORITY is linked from many good hubs).
+
+    Update per round, all int64:
+        a'(v) = sum_{u->v} w(u,v) * h(u);  a(v) = a'(v)*scale DIV sum(a')
+        h'(u) = sum_{u->v} w(u,v) * a(v);  h(u) = h'(u)*scale DIV sum(h')
+    L1 normalization by floor division keeps every score in [0, scale]
+    and is engine-exact; mass lost to floor() is deterministic spec.
+    raw*scale can pass int64 (raw ~ total_edge_weight * scale); Python
+    integers are unbounded, so every step, greatest(tot, 1) guard
+    included, bit-matches DuckDB hugeint ``//`` (tested).
+
+    Scale shape: like pagerank_int, the edge list (every bucket graph)
+    finishes on the driver in exact Python integers (``_collect_edges``,
+    cap ``MAX_DRIVER_EDGES``, ValueError past it). Edges with a null
+    endpoint are dropped first.
+
+    Returns ``DataFrame[node, hub_micro: long, auth_micro: long]``.
+    """
+    edges = edges.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
+    rows = _collect_edges(edges.select("src", "dst", "w"), "hits_int")
+    spark = edges.sparkSession
+    schema = f"node {dict(edges.dtypes)['src']}, hub_micro long, auth_micro long"
+    if not rows:
+        return spark.createDataFrame([], schema=schema)
     src = [r["src"] for r in rows]
     dst = [r["dst"] for r in rows]
     w = [int(r["w"]) for r in rows]
     nodes = sorted(set(src) | set(dst))
-    n = len(nodes)
-    init = scale // n
+    init = scale // len(nodes)
     h = {v: init for v in nodes}
     a = {v: init for v in nodes}
     for _ in range(iterations):
@@ -450,122 +434,8 @@ def _hits_int_local(rows, iterations: int, scale: int) -> list[tuple]:
             raw[s] = raw.get(s, 0) + ww * a[d]
         tot = max(sum(raw.values()), 1)
         h = {v: (raw.get(v, 0) * scale) // tot for v in nodes}
-    return [(v, h[v], a[v]) for v in nodes]
-
-
-def hits_int(
-    edges: DataFrame,
-    iterations: int = 3,
-    scale: int = 1_000_000,
-    max_local_edges: int = 200_000,
-) -> DataFrame:
-    """HITS hubs & authorities (Kleinberg, JACM 1999) in integer
-    micro-units — the link-analysis complement to pagerank_int for
-    crawl-frontier scoring (a good HUB links to many good authorities;
-    a good AUTHORITY is linked from many good hubs).
-
-    Update per round, all int64:
-        a'(v) = sum_{u->v} w(u,v) * h(u);  a(v) = a'(v)*scale DIV sum(a')
-        h'(u) = sum_{u->v} w(u,v) * a(v);  h(u) = h'(u)*scale DIV sum(h')
-    L1 normalization by floor division keeps every score in [0, scale]
-    and is engine-exact; mass lost to floor() is deterministic spec.
-    The normalizing sum is a 1-row aggregate joined back via crossJoin
-    (broadcast) — no driver action inside the loop. raw*scale can pass
-    int64 (raw ~ total_edge_weight * scale), so the normalization step
-    runs in decimal(38,0): Spark's `div` on decimal is exact integral
-    division and bit-matches DuckDB hugeint `//` (tested).
-
-    Scale shape: like pagerank_int, each iteration is two join+groupBy
-    passes over the aggregated edge list. An edge list within
-    ``max_local_edges`` (every bucket graph) finishes on the driver in
-    exact Python integers (``guards.collect_at_most``). Past the cap the
-    edge list and node set are localCheckpoint-ed once (without it every
-    unrolled round re-derives the edge lineage: 1370 exchanges for 3
-    rounds over a parquet-derived edge list); per-round score frames
-    stay plan-chained. Edges with a null endpoint are dropped first.
-
-    Returns ``DataFrame[node, hub_micro: long, auth_micro: long]``.
-    """
-    edges = edges.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-    rows = collect_at_most(
-        edges.select("src", "dst", "w"), max_local_edges, "hits_int"
-    )
-    if rows is not None:
-        node_t = dict(edges.dtypes)["src"]
-        out = _hits_int_local(rows, iterations, scale) if rows else []
-        return edges.sparkSession.createDataFrame(
-            out, schema=f"node {node_t}, hub_micro long, auth_micro long"
-        )
-    edges = edges.localCheckpoint(eager=True)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    ).localCheckpoint(eager=True)
-    n = nodes.count()
-    if n == 0:
-        return nodes.select(
-            "node",
-            F.lit(0).cast("long").alias("hub_micro"),
-            F.lit(0).cast("long").alias("auth_micro"),
-        )
-    init = scale // n
-    hubs = nodes.withColumn("h", F.lit(init).cast("long"))
-    auths = nodes.withColumn("a", F.lit(init).cast("long"))
-    for _ in range(iterations):
-        a_raw = (
-            edges.join(hubs, edges["src"] == hubs["node"])
-            # w*h and its sum in decimal(38,0): h reaches `scale` (1e6) and
-            # total edge weight is unbounded at corpus scale, so an int64
-            # sum wraps (non-ANSI) past ~9.2e12 total weight — the DuckDB
-            # oracle sums in hugeint, so the whole path must be wide.
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("w").cast("decimal(38,0)") * F.col("h")).alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("raw"))
-        )
-        a_tot = a_raw.agg(F.sum("raw").alias("tot"))
-        auths = (
-            nodes.join(a_raw, "node", "left")
-            .crossJoin(F.broadcast(a_tot))
-            .select(
-                "node",
-                F.expr(
-                    f"cast((cast(coalesce(raw, 0) as decimal(38,0)) * {scale})"
-                    " div greatest(tot, 1) as bigint)"
-                ).alias("a"),
-            )
-        )
-        h_raw = (
-            edges.join(auths, edges["dst"] == auths["node"])
-            .select(
-                F.col("src").alias("node"),
-                (F.col("w").cast("decimal(38,0)") * F.col("a")).alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("raw"))
-        )
-        h_tot = h_raw.agg(F.sum("raw").alias("tot"))
-        hubs = (
-            nodes.join(h_raw, "node", "left")
-            .crossJoin(F.broadcast(h_tot))
-            .select(
-                "node",
-                F.expr(
-                    f"cast((cast(coalesce(raw, 0) as decimal(38,0)) * {scale})"
-                    " div greatest(tot, 1) as bigint)"
-                ).alias("h"),
-            )
-        )
-    return (
-        hubs.join(auths, "node")
-        .select(
-            "node",
-            F.col("h").alias("hub_micro"),
-            F.col("a").alias("auth_micro"),
-        )
+    return spark.createDataFrame(
+        [(v, h[v], a[v]) for v in nodes], schema=schema
     )
 
 
@@ -937,27 +807,16 @@ def degree_assortativity(
     )
 
 
-# Transition-count edges the Markov chain finishes collect to the driver
-# (|states|² rows; every caller's states are roles or tools).
-MAX_MARKOV_EDGES = 200_000
-
-
 def _markov_chain(edges, iterations, src_col, dst_col, w_col, what):
     """(states, ppm matrix, stationary ppm) of a transition-count edge
     list, in exact Python integers after one bounded collect."""
-    rows = collect_at_most(
+    rows = _collect_edges(
         edges.select(
             F.col(src_col).alias("src"), F.col(dst_col).alias("dst"),
             F.col(w_col).cast("long").alias("c"),
         ),
-        MAX_MARKOV_EDGES, what,
+        what,
     )
-    if rows is None:
-        raise ValueError(
-            f"{what}: more than MAX_MARKOV_EDGES={MAX_MARKOV_EDGES} "
-            "transition edges; the chain is |states|² rows, so coarsen "
-            "the states before calling."
-        )
     e = [(r["src"], r["dst"], int(r["c"])) for r in rows]
     c_src: dict = {}
     for s, _d, c in e:
@@ -1000,8 +859,7 @@ def markov_stationary(
 
     Scale shape: Spark reduces the corpus to the |states|² edge list;
     the power iteration finishes on the driver in exact Python integers
-    (``guards.collect_at_most``, cap ``MAX_MARKOV_EDGES``, ValueError
-    past it).
+    (``_collect_edges``, cap ``MAX_DRIVER_EDGES``, ValueError past it).
 
     Returns ``DataFrame[state: string, pi_ppm: long]``.
     """

@@ -1032,6 +1032,11 @@ def propensity_match(
     )
 
 
+# Aggregated (winner, loser) rows bradley_terry collects to the driver;
+# every caller passes a players² win table.
+MAX_BT_PAIRS = 100_000
+
+
 def bradley_terry(
     pair_wins: DataFrame,
     winner_col: str = "winner",
@@ -1039,7 +1044,6 @@ def bradley_terry(
     w_col: str = "w",
     iterations: int = 3,
     scale: int = 10**6,
-    max_local_pairs: int = 100_000,
 ) -> DataFrame:
     """Bradley-Terry preference-strength fit (Bradley & Terry 1952) via
     the MM algorithm (Hunter, Annals of Statistics 2004) — the standard
@@ -1060,12 +1064,10 @@ def bradley_terry(
     normalization (BT is scale-invariant; the floor spec above IS the
     contract).
 
-    Scale shape: a pair table within ``max_local_pairs`` finishes on the
-    driver in Python arbitrary-precision ints (``guards.collect_at_most``);
-    past the bound the same arithmetic runs as per-iteration
-    decimal(38,0) join+groupBy passes over the aggregated pairs —
-    identical output by construction. Rows with a null winner or loser
-    are dropped first, on both paths.
+    Scale shape: the pair table finishes on the driver in Python
+    arbitrary-precision ints (``guards.collect_at_most``, cap
+    ``MAX_BT_PAIRS``, ValueError past it). Rows with a null winner or
+    loser are dropped first.
     """
     pw = (
         pair_wins.filter(F.col(winner_col).isNotNull() & F.col(loser_col).isNotNull())
@@ -1074,99 +1076,38 @@ def bradley_terry(
     )
     s = int(scale)
 
-    rows = collect_at_most(pw, max_local_pairs, "bradley_terry")
-    if rows is not None:
-        wins: dict = {}
-        npair: dict = {}
-        for a, b, w in rows:
-            w = int(w)
-            wins[a] = wins.get(a, 0) + w
-            wins.setdefault(b, 0)
-            key = (a, b) if a < b else (b, a)
-            npair[key] = npair.get(key, 0) + w
-        players = sorted(wins)
-        p = {v: s for v in players}
-        for _ in range(iterations):
-            denom = {v: 0 for v in players}
-            for (i, j), n in npair.items():
-                t = (n * s) // max(p[i] + p[j], 1)
-                denom[i] += t
-                denom[j] += t
-            p = {v: (wins[v] * s * s) // max(denom[v], 1) for v in players}
-        nm = {v: 0 for v in players}
-        for (i, j), n in npair.items():
-            nm[i] += n
-            nm[j] += n
-        return pw.sparkSession.createDataFrame(
-            [(v, wins[v], nm[v], p[v]) for v in players],
-            schema=f"pl {dict(pw.dtypes)['pl_w']}, wins long, n_matches long, "
-            "p_micro long",
+    rows = collect_at_most(pw, MAX_BT_PAIRS, "bradley_terry")
+    if rows is None:
+        raise ValueError(
+            f"bradley_terry: more than MAX_BT_PAIRS={MAX_BT_PAIRS} "
+            "(winner, loser) pairs; the fit finishes on the driver, so "
+            "coarsen the players before calling."
         )
-
-    pw = pw.localCheckpoint(eager=True)
-    # distributed twin: identical floor arithmetic in decimal(38,0)
-    np_ = (
-        pw.select(
-            F.least("pl_w", "pl_l").alias("i"),
-            F.greatest("pl_w", "pl_l").alias("j"),
-            "w",
-        )
-        .groupBy("i", "j")
-        .agg(F.sum("w").alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    players = (
-        np_.select(F.col("i").alias("pl"))
-        .union(np_.select(F.col("j").alias("pl")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    wins = pw.groupBy(F.col("pl_w").alias("pl")).agg(F.sum("w").alias("wins"))
-    nm = (
-        np_.select(F.col("i").alias("pl"), "n")
-        .union(np_.select(F.col("j").alias("pl"), "n"))
-        .groupBy("pl")
-        .agg(F.sum("n").alias("n_matches"))
-    )
-    p = players.select("pl", F.lit(s).cast("long").alias("p"))
+    wins: dict = {}
+    npair: dict = {}
+    for a, b, w in rows:
+        w = int(w)
+        wins[a] = wins.get(a, 0) + w
+        wins.setdefault(b, 0)
+        key = (a, b) if a < b else (b, a)
+        npair[key] = npair.get(key, 0) + w
+    players = sorted(wins)
+    p = {v: s for v in players}
     for _ in range(iterations):
-        pi = p.select(F.col("pl").alias("i"), F.col("p").alias("p_i"))
-        pj = p.select(F.col("pl").alias("j"), F.col("p").alias("p_j"))
-        t = np_.join(pi, "i").join(pj, "j").select(
-            "i",
-            "j",
-            F.expr(
-                f"cast(n as decimal(38,0)) * {s}"
-                " div greatest(p_i + p_j, 1)"
-            ).alias("t"),
-        )
-        denom = (
-            t.select(F.col("i").alias("pl"), "t")
-            .union(t.select(F.col("j").alias("pl"), "t"))
-            .groupBy("pl")
-            .agg(F.sum("t").alias("denom"))
-        )
-        p = (
-            players.join(wins, "pl", "left")
-            .join(denom, "pl", "left")
-            .select(
-                "pl",
-                F.expr(
-                    f"cast(coalesce(wins, 0) as decimal(38,0)) * {s} * {s}"
-                    " div greatest(coalesce(denom, 1), 1)"
-                ).cast("long").alias("p"),
-            )
-        )
-    return (
-        players.join(wins, "pl", "left")
-        .join(nm, "pl", "left")
-        .join(p, "pl")
-        .select(
-            "pl",
-            F.coalesce(F.col("wins"), F.lit(0)).cast("long").alias("wins"),
-            F.coalesce(F.col("n_matches"), F.lit(0)).cast("long").alias("n_matches"),
-            F.col("p").alias("p_micro"),
-        )
+        denom = {v: 0 for v in players}
+        for (i, j), n in npair.items():
+            t = (n * s) // max(p[i] + p[j], 1)
+            denom[i] += t
+            denom[j] += t
+        p = {v: (wins[v] * s * s) // max(denom[v], 1) for v in players}
+    nm = {v: 0 for v in players}
+    for (i, j), n in npair.items():
+        nm[i] += n
+        nm[j] += n
+    return pw.sparkSession.createDataFrame(
+        [(v, wins[v], nm[v], p[v]) for v in players],
+        schema=f"pl {dict(pw.dtypes)['pl_w']}, wins long, n_matches long, "
+        "p_micro long",
     )
 
 

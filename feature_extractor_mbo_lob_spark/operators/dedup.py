@@ -350,12 +350,16 @@ def simhash_candidates(sim: DataFrame, chunk_bits: int = 16) -> DataFrame:
     ).drop("sh_a", "sh_b")
 
 
+# Near-dup pairs (~32 MB of longs) connected_components finishes with
+# driver union-find; larger pair sets take the Pregel-style loop.
+MAX_DRIVER_PAIRS = 2_000_000
+
+
 def connected_components(
     edges: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 25,
-    collect_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Duplicate-cluster assembly: connected components over an undirected
     near-dup pair set via min-label propagation. Returns (id, cluster_id)
@@ -375,11 +379,11 @@ def connected_components(
     e_sel = edges.select(
         F.col(id_a).cast("long").alias("src"), F.col(id_b).cast("long").alias("dst")
     ).filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-    # Route: up to ``collect_threshold`` pairs (~32 MB of longs) the
-    # components come from driver union-find (guards.collect_at_most) —
-    # min-label CC is a pure function of the edge set, so the output equals
-    # the Pregel-style loop below, which larger pair sets take unchanged.
-    head = collect_at_most(e_sel, collect_threshold, "connected_components")
+    # Route: up to ``MAX_DRIVER_PAIRS`` pairs the components come from
+    # driver union-find (guards.collect_at_most) — min-label CC is a pure
+    # function of the edge set, so the output equals the Pregel-style loop
+    # below, which larger pair sets take unchanged.
+    head = collect_at_most(e_sel, MAX_DRIVER_PAIRS, "connected_components")
     if head is not None:
         parent: dict[int, int] = {}
 

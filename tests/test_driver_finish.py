@@ -2,9 +2,11 @@
 
 * ``collect_at_most`` itself: rows up to the cap, None past it, caller's
   job description restored.
-* Forced-branch parity: every routing user (driver finish below its cap,
-  distributed twin past it) gives bit-identical output on both branches,
-  degenerate rows included (null endpoints, a zero-out-weight source).
+* Forced-branch parity: the routing user (``connected_components``:
+  driver union-find below its cap, Pregel-style loop past it) gives
+  bit-identical output on both branches, degenerate rows included.
+* Degenerate input on the driver finishes: null endpoints are dropped and
+  a zero-out-weight source still counts as a node.
 * Guards: the operators that always finish on the driver raise a
   ValueError naming themselves past their module-level cap.
 * Vector corpora (GEMM index, DBSCAN sample) are sized column-free and
@@ -56,7 +58,7 @@ def test_collect_at_most_restores_job_description(spark):
 
 
 # ---------------------------------------------------------------------------
-# forced-branch parity: default cap (driver) vs cap = 0 (distributed)
+# degenerate input; forced-branch parity of connected_components
 # ---------------------------------------------------------------------------
 
 # a 3-cycle with a chord, a source whose whole out-weight is 0 (z), and one
@@ -72,44 +74,55 @@ _PAIR_WINS = [
 _CC_PAIRS = [(1, 2), (2, 3), (5, 6), (9, 9), (None, 4), (7, None)]
 
 
-def _pagerank(spark, **cap):
+def _pagerank(spark):
     df = spark.createDataFrame(_EDGES, "src string, dst string, w long")
-    return graph.pagerank_int(df, iterations=3, **cap)
+    return graph.pagerank_int(df, iterations=3)
 
 
-def _hits(spark, **cap):
+def _hits(spark):
     df = spark.createDataFrame(_EDGES, "src string, dst string, w long")
-    return graph.hits_int(df, iterations=3, **cap)
+    return graph.hits_int(df, iterations=3)
 
 
-def _bradley_terry(spark, **cap):
+def _bradley_terry(spark):
     df = spark.createDataFrame(_PAIR_WINS, "winner string, loser string, w long")
-    return stats.bradley_terry(df, iterations=3, **cap)
+    return stats.bradley_terry(df, iterations=3)
 
 
-def _components(spark, **cap):
+def _components(spark):
     df = spark.createDataFrame(_CC_PAIRS, "id_a long, id_b long")
-    return dedup.connected_components(df, **cap)
+    return dedup.connected_components(df)
 
 
-# user -> (builder, its cap parameter, output keys after dropping null rows)
+# driver finish -> (frame factory, output keys after dropping null rows)
+_DRIVER_ONLY = {
+    "pagerank_int": (_pagerank, {"a", "b", "c", "z"}),
+    "hits_int": (_hits, {"a", "b", "c", "z"}),
+    "bradley_terry": (_bradley_terry, {"a", "b", "c", "d"}),
+}
 _ROUTED = {
-    "pagerank_int": (_pagerank, "max_driver_edges", {"a", "b", "c", "z"}),
-    "hits_int": (_hits, "max_local_edges", {"a", "b", "c", "z"}),
-    "bradley_terry": (_bradley_terry, "max_local_pairs", {"a", "b", "c", "d"}),
-    "connected_components": (_components, "collect_threshold", {1, 2, 3, 5, 6, 9}),
+    "connected_components": (_components, dedup, "MAX_DRIVER_PAIRS", {1, 2, 3, 5, 6, 9}),
 }
 
 
-@pytest.mark.parametrize("name", sorted(_ROUTED))
-def test_routed_branches_bit_identical(spark, name):
-    """Default cap (driver finish) vs cap = 0 (distributed twin)."""
-    build, cap, keys = _ROUTED[name]
-    driver, forced = build(spark), build(spark, **{cap: 0})
-    assert forced.dtypes == driver.dtypes
-    rows = sorted(map(tuple, driver.collect()))
-    assert rows == sorted(map(tuple, forced.collect()))
+@pytest.mark.parametrize("name", sorted(_DRIVER_ONLY))
+def test_driver_finish_degenerate_keys(spark, name):
+    build, keys = _DRIVER_ONLY[name]
     # null endpoints are dropped; a zero-weight source still counts as a node
+    assert {r[0] for r in build(spark).collect()} == keys
+
+
+@pytest.mark.parametrize("name", sorted(_ROUTED))
+def test_routed_branches_bit_identical(spark, monkeypatch, name):
+    """Default cap (driver finish) vs cap = 0 (distributed route)."""
+    build, module, cap, keys = _ROUTED[name]
+    driver = build(spark)
+    rows = sorted(map(tuple, driver.collect()))
+    monkeypatch.setattr(module, cap, 0)
+    forced = build(spark)
+    assert forced.dtypes == driver.dtypes
+    assert rows == sorted(map(tuple, forced.collect()))
+    # null endpoints are dropped
     assert {r[0] for r in rows} == keys
 
 
@@ -121,21 +134,25 @@ def test_routed_branches_bit_identical(spark, name):
 @pytest.mark.parametrize(
     "module, cap, fn",
     [
-        (graph, "MAX_MARKOV_EDGES", "markov_stationary"),
-        (graph, "MAX_MARKOV_EDGES", "markov_entropy_rate"),
+        (graph, "MAX_DRIVER_EDGES", "pagerank_int"),
+        (graph, "MAX_DRIVER_EDGES", "hits_int"),
+        (graph, "MAX_DRIVER_EDGES", "markov_stationary"),
+        (graph, "MAX_DRIVER_EDGES", "markov_entropy_rate"),
+        (stats, "MAX_BT_PAIRS", "bradley_terry"),
         (evalmetrics, "MAX_CONTINGENCY_CELLS", "v_measure"),
         (evalmetrics, "MAX_CONTINGENCY_CELLS", "adjusted_rand_index"),
     ],
 )
 def test_driver_finish_raises_past_cap(spark, monkeypatch, module, cap, fn):
-    if module is graph:
+    if module is evalmetrics:
+        df = spark.createDataFrame([(0, "x"), (1, "y")], "k int, c string")
+        args = (df, "k", "c")
+    else:
         df = spark.createDataFrame(
             [("a", "b", 1), ("b", "a", 1)], "src string, dst string, w long"
         )
-        args = (df,)
-    else:
-        df = spark.createDataFrame([(0, "x"), (1, "y")], "k int, c string")
-        args = (df, "k", "c")
+        # bradley_terry reads its (winner, loser) pairs from src, dst
+        args = (df,) if module is graph else (df, "src", "dst")
     getattr(module, fn)(*args).collect()  # within the default cap
     monkeypatch.setattr(module, cap, 0)
     with pytest.raises(ValueError, match=fn):

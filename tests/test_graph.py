@@ -53,24 +53,6 @@ def _transcripts(spark, rows):
     )
 
 
-def test_turn_similarity_edges_weights(spark):
-    t = _transcripts(spark, [
-        ("c1", 0, "alpha beta gamma"),
-        ("c1", 1, "alpha beta delta"),
-        ("c1", 2, "epsilon zeta"),
-        ("c2", 0, "alpha beta"),   # different conv: never pairs with c1
-        ("c2", 1, "alpha beta"),
-    ])
-    edges = {(r.src, r.dst): r.w for r in graph.turn_similarity_edges(t).collect()}
-    # c1 turns 0-1 share {alpha, beta} -> weight 2, both directions
-    assert edges[("c1#0", "c1#1")] == 2 and edges[("c1#1", "c1#0")] == 2
-    # c1 turn 2 shares nothing -> no edges
-    assert not any("c1#2" in k for pair in edges for k in pair)
-    # cross-conversation pairs never exist
-    assert not any(a.startswith("c1") and b.startswith("c2") for a, b in edges)
-    assert edges[("c2#0", "c2#1")] == 2
-
-
 def test_textrank_turns_centrality_order(spark):
     # star graph inside one conv: turn 0 shares a word with every other
     # turn; the satellites share nothing with each other -> turn 0 is
@@ -158,23 +140,6 @@ def test_hits_int_huge_weights_no_int64_wrap(spark):
     h, a = _hits_naive(edges, iterations=2)
     assert out == {v: (h[v], a[v]) for v in h}
     assert all(v[0] >= 0 and v[1] >= 0 for v in out.values())
-
-
-def test_hits_int_distributed_path_matches_local(spark):
-    """The bounded single-task fast path and the generic distributed join
-    loop are the same arithmetic: forcing the distributed path
-    (max_local_edges=0) reproduces the local path bit-for-bit."""
-    edges = [
-        ("h1", "a1", 1), ("h1", "a2", 2), ("h2", "a1", 3),
-        ("a1", "a2", 1), ("a2", "h1", 5),
-    ]
-    df = spark.createDataFrame(edges, "src string, dst string, w long")
-    local = {r.node: (r.hub_micro, r.auth_micro)
-             for r in graph.hits_int(df, iterations=3).collect()}
-    dist = {r.node: (r.hub_micro, r.auth_micro)
-            for r in graph.hits_int(df, iterations=3,
-                                    max_local_edges=0).collect()}
-    assert local == dist
 
 
 def test_link_prediction_hand_case(spark):

@@ -233,15 +233,6 @@ def test_bradley_terry_dominance_order(spark):
     assert out["A"].p_micro > out["B"].p_micro > out["C"].p_micro > 0
 
 
-def test_bradley_terry_local_equals_distributed(spark):
-    from feature_extractor_mbo_lob_spark.functions.stats import bradley_terry
-
-    pc = _bt_pairs(spark)
-    local = sorted(map(tuple, bradley_terry(pc).collect()))
-    dist = sorted(map(tuple, bradley_terry(pc, max_local_pairs=0).collect()))
-    assert local == dist
-
-
 # --- Cochran-Armitage ----------------------------------------------------------------
 
 

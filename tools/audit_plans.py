@@ -844,22 +844,12 @@ def main() -> None:
         "HITS hubs/authorities (bounded fast path, driver finish)",
         hits_int(edges, iterations=3),
         "The aggregated bucket graph is O(buckets^2) rows by construction, "
-        "under max_local_edges — it is collected once "
+        "under graph.MAX_DRIVER_EDGES — it is collected once "
         "(guards.collect_at_most) and ALL iterations run on the driver in "
         "Python arbitrary-precision ints (the hugeint contract exactly). "
         "The result is a driver-built local relation: no stage, no Python "
         "worker, no per-iteration join/shuffle ladder.",
         forbid=("CartesianProduct", "BatchEvalPython", "Exchange",
-                "FlatMapGroupsInPandas", "MapInPandas"),
-    ))
-
-    sections.append(summarize(
-        "HITS hubs/authorities (distributed path, 3 iterations)",
-        hits_int(edges, iterations=3, max_local_edges=0),
-        "Past the bound: each iteration is two join+groupBy passes over "
-        "the AGGREGATED edge list + a broadcast 1-row normalizer. Exact "
-        "decimal(38,0) floor division; zero Python stages on this path.",
-        forbid=("CartesianProduct", "BatchEvalPython",
                 "FlatMapGroupsInPandas", "MapInPandas"),
     ))
 
@@ -1073,21 +1063,11 @@ def main() -> None:
         "Bradley-Terry MM fit (bounded fast path, driver finish)",
         bradley_terry(bt_pairs),
         "Input is the AGGREGATED O(players^2) win table; within "
-        "max_local_pairs it is collected once (guards.collect_at_most) and "
+        "stats.MAX_BT_PAIRS it is collected once (guards.collect_at_most) and "
         "ALL MM iterations run on the driver in Python arbitrary-precision "
         "ints (the hugeint contract). The result is a driver-built local "
         "relation, the same shape as the HITS fast path.",
         forbid=("CartesianProduct", "BatchEvalPython", "Exchange",
-                "FlatMapGroupsInPandas", "MapInPandas"),
-    ))
-
-    sections.append(summarize(
-        "Bradley-Terry MM fit (distributed decimal path)",
-        bradley_terry(bt_pairs, max_local_pairs=0),
-        "Past the bound: per iteration, two hash joins of the pair table "
-        "to the current strengths + one union groupBy — identical "
-        "decimal(38,0) floor arithmetic, zero Python stages.",
-        forbid=("CartesianProduct", "BroadcastNestedLoop", "BatchEvalPython",
                 "FlatMapGroupsInPandas", "MapInPandas"),
     ))
 
