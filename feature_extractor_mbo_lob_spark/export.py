@@ -109,8 +109,11 @@ def export_with_manifests(
     resume: bool = True,
 ) -> dict:
     """Write df partitioned by conv-bucket with one lineage manifest per
-    bucket; on resume, buckets with a valid manifest are skipped entirely
-    (their input rows are filtered out before any compute on the write side).
+    bucket; on resume, buckets with a valid manifest are not fingerprinted
+    or written again. The skip is a filter on df's output, and Catalyst does
+    not push it below a grouped pandas stage: on the shipped job's plan it
+    sits above the order-stats FlatMapGroupsInPandas, so the feature stages
+    still run over the whole input.
 
     Returns a run report {written_buckets, skipped_buckets, rows, wall_sec}.
     """

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
+from ..operators import ordering
 
 
 def _label_group(
@@ -130,8 +131,7 @@ def triple_barrier_labels(
     # per conversation — cuts the Python/Arrow round-trips by ~100x on many
     # small keys (same trick as order_stats/vectorized_flagship); the kernel
     # is applied per key segment inside the batch
-    nb = _n_buckets(df)
-    bucketed = df.withColumn("_tbb", F.pmod(F.xxhash64(key), F.lit(nb)).cast("int"))
+    bucketed = ordering.super_group(df, key, "_tbb")
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.drop(columns=["_tbb"])
@@ -142,11 +142,6 @@ def triple_barrier_labels(
         return pd.concat(parts, ignore_index=True)
 
     return bucketed.groupBy("_tbb").applyInPandas(fn, schema=out_schema)
-
-
-def _n_buckets(df: DataFrame) -> int:
-    sp = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    return max(sp * 4, 64)
 
 
 def volatility_scaled_barriers(
@@ -164,8 +159,6 @@ def volatility_scaled_barriers(
     Returns (df + barrier_scale column, per-key vol table). vol_ref defaults
     to the global median of per-key vols (two tiny aggregates)."""
     from pyspark.sql import functions as F
-
-    from ..operators import ordering
 
     w = ordering.stable_window(cfg)
     prev = F.lag(price_col).over(w)
@@ -223,10 +216,7 @@ def triple_barrier_labels_vol_scaled(
     ) + ", tb_label tinyint, tb_exit_offset int, tb_exit_return double"
 
     key = cfg.key_col
-    nb = _n_buckets(scaled_df)
-    bucketed = scaled_df.withColumn(
-        "_tbb", F.pmod(F.xxhash64(key), F.lit(nb)).cast("int")
-    )
+    bucketed = ordering.super_group(scaled_df, key, "_tbb")
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.drop(columns=["_tbb"])

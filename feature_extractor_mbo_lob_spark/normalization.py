@@ -355,8 +355,7 @@ def isotonic_fit(
     )
     if max_turns is not None:
         base = base.where(F.col("_ti") < max_turns)
-    nb = max(int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")) * 4, 64)
-    bucketed = base.withColumn("_ib", F.pmod(F.xxhash64(key), F.lit(nb)).cast("int"))
+    bucketed = ordering.super_group(base, key, "_ib")
 
     def _pav(y: np.ndarray):
         # blocks of (sum, len); merge while decreasing

@@ -1,18 +1,19 @@
-"""Rolling order statistics (percentiles + large-turn ratio) — the engine's
-hottest computation, with two exact implementations:
+"""Rolling order statistics (percentiles + large-turn ratio) and feature 58
+flow volatility: the frame-bound features, the engine's hottest computation.
 
-* native  — JVM window: ONE collect_list per frame, array_sort, interpolate
-  (operators/rolling.py). Zero Python, but allocates + sorts a w-element
-  array PER ROW — profiled at ~85% of feature-stage time at w=128.
-* pandas  — vectorized numpy per conversation via applyInPandas:
-  sliding_window_view + np.quantile(axis=1) computes every frame's four
-  percentiles and the strictly-greater count in tight C loops, one Arrow
-  batch per conversation. Same interpolation formula (linear at q*(n-1)),
-  allclose-identical output (tested).
+Each has ONE numpy implementation, shared by every plan:
 
-Both are EXACT; choose with PipelineConfig-level wiring (plans use pandas
-for the throughput path; the oracle-checked queries keep native to prove the
-JVM formulation too).
+* _bucket_order_stats: exact interpolated percentiles (linear at q*(n-1),
+  Spark `percentile` == DuckDB `quantile_cont`) and the strictly-greater-
+  than-p90 count over every trailing frame of a bucket of concatenated
+  conversations: one +inf-padded sliding_window_view + one sort, no Python
+  loop per conversation or per row;
+* flow_vol_from_sig: feature 58 from prefix-sum diffs.
+
+The vectorized kernel (plans/vectorized.py) calls them directly;
+with_order_stats_pandas runs them as a bucketed Arrow stage for the
+declarative plan, the skew route and the registry queries. The rolling
+Window cascade (operators/rolling.py) computes only the prefix-sum features.
 
 Reference analog: the ring buffer's lazily-sorted percentile cache
 (src/features/mbo_features/window.rs:170-187).
@@ -25,26 +26,30 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..config import PipelineConfig
+from . import ordering
 
 QS = (0.25, 0.50, 0.75, 0.90)
 
 
-def _stat_cols(window_sizes, flow_vol: bool = False) -> list[str]:
+def _stat_cols(window_sizes) -> list[str]:
     cols = []
     for w in window_sizes:
         cols += [f"char_p25_w{w}", f"char_p50_w{w}", f"char_p75_w{w}",
-                 f"char_p90_w{w}", f"large_turn_ratio_w{w}"]
-        if flow_vol:
-            cols.append(f"flow_volatility_w{w}")
+                 f"char_p90_w{w}", f"large_turn_ratio_w{w}",
+                 f"flow_volatility_w{w}"]
     return cols
 
 
 def flow_vol_from_sig(sig: np.ndarray, gstart: np.ndarray, w: int) -> np.ndarray:
-    """Feature 58 numpy kernel — std of net role flow over 10 equal
-    sub-windows of the trailing frame, via prefix-sum diffs with sequential
-    flow accumulation. SHARED by the vectorized flagship kernel and the
-    pandas order-stats stage so all paths are bit-identical to the HOF twin
-    (operators/rolling.flow_volatility_expr).
+    """Feature 58 numpy kernel (reference: order_flow_volatility,
+    src/features/mbo_features/flow_features.rs:86-146): split the trailing
+    frame's signed role stream into FLOW_VOL_SUBWINDOWS equal sub-windows
+    (the last one takes the remainder), per-sub flow = sum(s)/sum(|s|) when
+    any participant else 0, result = population std of the sub flows; 0
+    unless the frame holds >= SUBWINDOWS * MIN_PER_SUB events. Sub-window
+    sums are prefix-sum diffs; the flows are accumulated in sub-window
+    order, as the DuckDB oracle does. SHARED by the vectorized flagship
+    kernel and the pandas order-stats stage.
 
     sig: +1 user / -1 assistant / 0 other per row (bucket-concatenated);
     gstart: per-row absolute index of the row's conversation start."""
@@ -81,52 +86,17 @@ def role_sig(roles: np.ndarray) -> np.ndarray:
     return np.where(roles == "user", 1.0, np.where(roles == "assistant", -1.0, 0.0))
 
 
-def _group_order_stats(x: np.ndarray, w: int) -> dict[str, np.ndarray]:
-    """Exact rolling percentiles + strictly-greater-than-p90 ratio for one
-    ordered series with trailing frames of size w (partial at the start).
-
-    Fully vectorized including partial head frames: the series is left-padded
-    with +inf, every sorted sliding window then holds its real values first
-    (infs sort to the tail), and per-row variable-size quantile gathers use
-    the effective frame length m = min(i+1, w). No Python loop — this is what
-    makes short conversations cheap.
-    """
-    n = len(x)
-    out = {}
-    padded = np.concatenate([np.full(w - 1, np.inf), x])
-    sw = np.sort(np.lib.stride_tricks.sliding_window_view(padded, w), axis=1)  # (n, w)
-    rows = np.arange(n)
-    m = np.minimum(rows + 1, w).astype(np.float64)
-
-    # explicit vlo + frac*(vhi-vlo) — bit-identical to the JVM/DuckDB
-    # formulation (np.quantile's symmetric lerp differs by 1 ulp)
-    for q in QS:
-        idx = (m - 1) * q
-        lo = np.floor(idx).astype(np.int64)
-        frac = idx - lo
-        hi = np.minimum(lo + 1, (m - 1).astype(np.int64))
-        vlo = sw[rows, lo]
-        vhi = sw[rows, hi]
-        out[q] = vlo + frac * (vhi - vlo)
-
-    # strictly-greater count among real values: inf pads always exceed p90,
-    # so subtract the pad count (w - m)
-    gt = (sw > out[0.90][:, None]).sum(axis=1) - (w - m)
-    ratio = gt / m
-
-    res = {f"char_p{int(q * 100)}": out[q] for q in QS}
-    res["large_turn_ratio"] = ratio
-    return res
-
-
 def _bucket_order_stats(x_all: np.ndarray, starts: np.ndarray, ends: np.ndarray,
                         w: int) -> dict[str, np.ndarray]:
-    """Order stats for EVERY conversation in a bucket in one shot: a single
-    +inf-padded concatenated array gives every row its trailing frame via
-    one sliding_window_view + one sort — no per-conversation Python loop.
+    """Exact rolling percentiles + strictly-greater-than-p90 ratio for EVERY
+    conversation in a bucket in one shot, trailing frames of size w (partial
+    at each conversation's start).
 
-    starts/ends delimit conversations in the (sorted) bucket arrays.
-    Identical arithmetic to _group_order_stats (tested equal).
+    starts/ends delimit conversations in the (sorted) bucket arrays. Each
+    conversation is left-padded with w-1 +inf values in one concatenated
+    array, so one sliding_window_view + one sort gives every row its frame
+    with the real values first (infs sort to the tail); per-row quantile
+    gathers use the effective frame length m = min(pos+1, w).
     """
     n = len(x_all)
     n_convs = len(starts)
@@ -151,41 +121,38 @@ def _bucket_order_stats(x_all: np.ndarray, starts: np.ndarray, ends: np.ndarray,
         hi = np.minimum(lo + 1, (m - 1).astype(np.int64))
         vlo = sw[rows, lo]
         vhi = sw[rows, hi]
+        # explicit vlo + frac*(vhi-vlo) — bit-identical to the DuckDB
+        # formulation (np.quantile's symmetric lerp differs by 1 ulp)
         out[q] = vlo + frac * (vhi - vlo)
+    # strictly-greater count among real values: inf pads always exceed p90,
+    # so subtract the pad count (w - m)
     gt = (sw > out[0.90][:, None]).sum(axis=1) - (w - m)
     res = {f"char_p{int(q * 100)}": out[q] for q in QS}
     res["large_turn_ratio"] = gt / m
     return res
 
 
-def with_order_stats_pandas(df: DataFrame, cfg: PipelineConfig,
-                            value_col: str = "char_len",
-                            n_buckets: int | None = None,
-                            flow_vol: bool = True) -> DataFrame:
-    """Adds the 5 order-stat columns per configured window, plus (by
-    default) feature 58 flow_volatility — it shares the same bucket pass,
-    costing one prefix-sum sweep instead of a separate JVM HOF stage (which
-    profiled ~25x slower on w=128 frames).
+def with_order_stats_pandas(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """Adds the 5 order-stat columns of ``char_len`` and feature 58
+    flow_volatility (from ``role``) per configured window, in one bucket
+    pass: flow volatility costs one prefix-sum sweep there.
 
-    Super-grouped: one Arrow batch per conversation-BUCKET (hash(conv) % P),
-    with a per-conversation numpy loop inside — per-group Spark/pandas
-    machinery is paid P times, not once per conversation (there can be 10^8
-    conversations; there are only ~thousands of buckets). Mega-conversations
-    are bounded by the same chunking contract as operators/skew.py upstream.
+    Super-grouped (ordering.super_group): one Arrow batch per conversation
+    bucket, with every conversation of the bucket processed at once inside.
+    Mega-conversations are bounded by the skew route's chunk key
+    (operators/skew.py), which this stage is keyed on there.
     """
-    from pyspark.sql import functions as F
-
     order_cols = list(cfg.order_cols)
     windows = tuple(cfg.window_sizes)
     sort_cols = [cfg.key_col] + order_cols
-    if flow_vol and "role" not in df.columns:
-        raise ValueError("flow_vol=True requires the role column")
+    if "role" not in df.columns:
+        raise ValueError("with_order_stats_pandas requires the role column")
     schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    schema += ", " + ", ".join(f"{c} double" for c in _stat_cols(windows, flow_vol))
+    schema += ", " + ", ".join(f"{c} double" for c in _stat_cols(windows))
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(sort_cols, kind="mergesort").reset_index(drop=True)
-        x_all = pdf[value_col].to_numpy(dtype=np.float64)
+        x_all = pdf["char_len"].to_numpy(dtype=np.float64)
         keys = pdf[cfg.key_col].to_numpy()
         # conversation boundaries within the sorted bucket
         change = np.empty(len(keys), dtype=bool)
@@ -194,24 +161,16 @@ def with_order_stats_pandas(df: DataFrame, cfg: PipelineConfig,
             change[1:] = keys[1:] != keys[:-1]
         starts = np.flatnonzero(change)
         ends = np.append(starts[1:], len(keys))
-        if flow_vol:
-            sizes = ends - starts
-            gstart = np.repeat(starts, sizes)
-            sig = role_sig(pdf["role"].to_numpy())
+        gstart = np.repeat(starts, ends - starts)
+        sig = role_sig(pdf["role"].to_numpy())
         for w in windows:
             stats = _bucket_order_stats(x_all, starts, ends, w)
             for name, arr in stats.items():
                 pdf[f"{name}_w{w}"] = arr
-            if flow_vol:
-                pdf[f"flow_volatility_w{w}"] = flow_vol_from_sig(sig, gstart, w)
+            pdf[f"flow_volatility_w{w}"] = flow_vol_from_sig(sig, gstart, w)
         return pdf
 
-    if n_buckets is None:
-        sp = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-        n_buckets = max(sp * 4, 64)
-    bucketed = df.withColumn(
-        "_osb", F.pmod(F.xxhash64(cfg.key_col), F.lit(n_buckets)).cast("int")
-    )
+    bucketed = ordering.super_group(df, cfg.key_col, "_osb")
     out_schema = "_osb int, " + schema
     return bucketed.groupBy("_osb").applyInPandas(fn, schema=out_schema).drop("_osb")
 
@@ -220,7 +179,7 @@ def trailing_rank_kernel(x: np.ndarray, w: int) -> np.ndarray:
     """Vectorized twin of rolling.with_trailing_rank for one ordered series:
     rank_ppm = (cnt_le − 1) * 1e6 div (m − 1) over the trailing w-frame
     (m = effective frame size; 0 when m == 1). Same +inf left-pad trick as
-    _group_order_stats — pads are never <= a finite current value, so the
+    _bucket_order_stats — pads are never <= a finite current value, so the
     count needs no pad correction. Bit-identical to the JVM formulation
     (pure integer comparisons and floor division; the float64 round-trip
     is exact for |x| < 2^53). One sliding_window_view + one comparison —

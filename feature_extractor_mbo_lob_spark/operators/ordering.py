@@ -44,6 +44,18 @@ def forward(cfg: PipelineConfig, lo: int, hi: int) -> WindowSpec:
     return stable_window(cfg).rowsBetween(lo, hi)
 
 
+def super_group(df: DataFrame, key: str, name: str) -> DataFrame:
+    """Adds int column ``name`` = pmod(xxhash64(key), max(4 x shuffle
+    partitions, 64)), the Arrow super-group bucket of ``key``. Grouping an
+    applyInPandas stage by it pays the per-group Spark/pandas machinery once
+    per bucket of many conversations, not once per conversation (there can
+    be 10^8 conversations; there are only ~thousands of buckets)."""
+    sp = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    return df.withColumn(
+        name, F.pmod(F.xxhash64(key), F.lit(max(sp * 4, 64))).cast("int")
+    )
+
+
 def assert_monotone_ts(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Audit column flagging timestamp regressions under the stable order
     (reference: validate_timestamps, src/lib.rs:132-134)."""

@@ -14,8 +14,9 @@ incremental counters translate here to *prefix-sum algebra*:
 
 which is O(n) regardless of w, and EXACT for integer-valued inputs
 (char counts, role indicators, epoch-us — all < 2^53), so parity with a
-frame-based oracle is bit-stable. Only order statistics (percentiles,
-large-turn ratio) still pay the true sliding frame.
+frame-based oracle is bit-stable. The frame-bound features (percentiles,
+large-turn ratio, feature-58 flow volatility) are not window expressions:
+operators/order_stats.py computes them in one numpy pass per bucket.
 
 Float-parity choices (frozen in the contract):
 * std is population std (reference: window.rs:190-213),
@@ -32,13 +33,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
-from ..contract import (
-    DIVISION_GUARD_EPS,
-    FLOW_VOL_MIN_PER_SUB,
-    FLOW_VOL_SUBWINDOWS,
-    MIN_DURATION_S,
-    MIN_STD,
-)
+from ..contract import DIVISION_GUARD_EPS, MIN_DURATION_S, MIN_STD
 from . import ordering
 
 
@@ -47,44 +42,12 @@ def _sliding_sum(cum_col: Column, w, n: int) -> Column:
     return cum_col - F.coalesce(F.lag(cum_col, n).over(w), F.lit(0.0))
 
 
-def flow_volatility_expr(arr: Column, cnt: Column) -> Column:
-    """Feature 58 (reference: order_flow_volatility,
-    src/features/mbo_features/flow_features.rs:86-146): split the frame's
-    signed role stream (+1 user / -1 assistant / 0 other, in frame order)
-    into FLOW_VOL_SUBWINDOWS equal sub-windows (last one takes the
-    remainder), per-sub flow = sum(s)/sum(|s|) when any participant else 0,
-    result = population std of the sub flows; 0 unless the frame holds
-    >= SUBWINDOWS * MIN_PER_SUB events.
-
-    All float accumulation is sequential (HOF aggregate over a 10-element
-    array) so the vectorized kernel can reproduce it bit-for-bit.
-    """
-    nsub = FLOW_VOL_SUBWINDOWS
-    cnt_i = cnt.cast("int")
-    ssz = F.floor(cnt / nsub).cast("int")
-
-    def flow(i: int) -> Column:
-        start = F.lit(i) * ssz + 1  # slice() is 1-based
-        length = ssz if i < nsub - 1 else (cnt_i - F.lit(nsub - 1) * ssz)
-        seg = F.slice(arr, start, length)
-        su = F.aggregate(seg, F.lit(0.0), lambda a, v: a + v)
-        tot = F.aggregate(seg, F.lit(0.0), lambda a, v: a + F.abs(v))
-        return F.when(tot > 0, su / tot).otherwise(F.lit(0.0))
-
-    flows = F.array(*[flow(i) for i in range(nsub)])
-    mean = F.aggregate(flows, F.lit(0.0), lambda a, v: a + v) / F.lit(float(nsub))
-    var = (
-        F.aggregate(flows, F.lit(0.0), lambda a, v: a + (v - mean) * (v - mean))
-        / F.lit(float(nsub))
-    )
-    return F.when(
-        cnt >= F.lit(float(nsub * FLOW_VOL_MIN_PER_SUB)), F.sqrt(var)
-    ).otherwise(F.lit(0.0))
-
-
-def with_rolling_features(df: DataFrame, cfg: PipelineConfig,
-                          include_order_stats: bool = True) -> DataFrame:
-    """Adds ROLLING_FEATURES with suffix _w{n} for every configured window.
+def with_rolling_features(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """Adds the prefix-sum ROLLING_FEATURES with suffix _w{n} for every
+    configured window: rates, role fractions, char mean/std/zscore/skew/hhi.
+    The frame-bound ones (char_p25..p90, large_turn_ratio, flow_volatility)
+    come from order_stats.with_order_stats_pandas, which plans.build_features
+    runs first.
 
     Requires ``char_len`` (added by state.with_state_features) and the raw
     role column. Adds a per-row ``role_flip`` helper (1.0 when role differs
@@ -104,19 +67,11 @@ def with_rolling_features(df: DataFrame, cfg: PipelineConfig,
 
     x = F.col("char_len")
 
-    # signed role stream for feature 58 (+1 user / -1 assistant / 0 other)
-    s_flow = (
-        F.when(F.col("role") == "user", F.lit(1.0))
-        .when(F.col("role") == "assistant", F.lit(-1.0))
-        .otherwise(F.lit(0.0))
-    )
-
     # one cumulative pass feeds every window size (single Window exec —
     # all aggregates share the identical spec); bulk select keeps the
     # logical plan small (serial driver analysis is an Amdahl term)
     df = df.select(
         "*",
-        s_flow.alias("_s"),
         F.row_number().over(w).alias("_rn"),
         us.alias("_us"),
         F.first(us).over(cum).alias("_first_us"),
@@ -129,7 +84,7 @@ def with_rolling_features(df: DataFrame, cfg: PipelineConfig,
         F.sum("role_flip").over(cum).alias("_cf"),
     )
 
-    helper = ["_s", "_rn", "_us", "_first_us", "_cx", "_cx2", "_cx3", "_cu", "_ca", "_ct", "_cf"]
+    helper = ["_rn", "_us", "_first_us", "_cx", "_cx2", "_cx3", "_cu", "_ca", "_ct", "_cf"]
 
     for n in cfg.window_sizes:
         cnt = F.least(F.col("_rn"), F.lit(n)).cast("double")
@@ -158,7 +113,8 @@ def with_rolling_features(df: DataFrame, cfg: PipelineConfig,
         hhi = F.when(sum_x > 0, sum_x2 / (sum_x * sum_x)).otherwise(F.lit(0.0))
 
         sfx = f"_w{n}"
-        sum_cols = [
+        df = df.select(
+            "*",
             (cnt / dur).cast("double").alias("turn_rate" + sfx),
             (n_user / cnt).cast("double").alias("user_frac" + sfx),
             (n_assistant / cnt).cast("double").alias("assistant_frac" + sfx),
@@ -169,56 +125,7 @@ def with_rolling_features(df: DataFrame, cfg: PipelineConfig,
             ((x - mean) / (std + F.lit(DIVISION_GUARD_EPS))).cast("double").alias("char_zscore" + sfx),
             skew.cast("double").alias("char_skew" + sfx),
             hhi.cast("double").alias("char_hhi" + sfx),
-        ]
-
-        if not include_order_stats:
-            # frame-bound features (order stats AND feature-58 flow vol)
-            # supplied by the pandas order-stats stage; emit only the
-            # prefix-sum features here
-            df = df.select("*", *sum_cols)
-            continue
-
-        # frame-bound computations, all-JVM path. flow vol: frame-ordered
-        # signed role stream collected once, then slice + sequential HOF
-        # aggregates (bit-identical to the numpy kernel; ~25x slower at
-        # w=128 — the pandas stage is the throughput path).
-        fr = ordering.trailing(cfg, n)
-        df = df.select("*", F.collect_list("_s").over(fr).alias("_farr"))
-        sum_cols.append(
-            flow_volatility_expr(F.col("_farr"), cnt)
-            .cast("double").alias("flow_volatility" + sfx)
         )
-
-        # order statistics: ONE collect_list per frame, sorted once (a
-        # materialized helper so the Window exec evaluates it exactly once);
-        # all four percentiles and the strictly-greater count derive from
-        # that single sorted array (mirrors the reference's lazy
-        # sorted-cache, window.rs:170-187).
-        df = df.select("*", F.array_sort(F.collect_list(x).over(fr)).alias("_sarr"))
-
-        def pct(q: float) -> Column:
-            # exact interpolated percentile at q over the sorted frame array
-            # (identical definition to Spark `percentile` / DuckDB
-            # quantile_cont: position q*(n-1), linear interpolation)
-            idx = (cnt - 1) * F.lit(q)
-            lo = F.floor(idx).cast("int")
-            frac = idx - lo
-            vlo = F.get("_sarr", lo)
-            vhi = F.coalesce(F.get("_sarr", lo + 1), vlo)
-            return vlo + frac * (vhi - vlo)
-
-        p90 = pct(0.90)
-        large_ratio = F.size(F.filter("_sarr", lambda e: e > p90)).cast("double") / cnt
-
-        df = df.select(
-            "*",
-            *sum_cols,
-            pct(0.25).cast("double").alias("char_p25" + sfx),
-            pct(0.50).cast("double").alias("char_p50" + sfx),
-            pct(0.75).cast("double").alias("char_p75" + sfx),
-            p90.cast("double").alias("char_p90" + sfx),
-            large_ratio.cast("double").alias("large_turn_ratio" + sfx),
-        ).drop("_sarr", "_farr")
     return df.drop(*helper)
 
 
@@ -330,9 +237,7 @@ def with_ewma(df: DataFrame, cfg: PipelineConfig, col: str,
         df.schema.fields
         + [StructField(out, DoubleType()), StructField(out + "_var", DoubleType())]
     )
-    sp = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    nb = max(sp * 4, 64)
-    bucketed = df.withColumn("_ewb", F.pmod(F.xxhash64(key), F.lit(nb)).cast("int"))
+    bucketed = ordering.super_group(df, key, "_ewb")
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.drop(columns=["_ewb"])
@@ -394,9 +299,7 @@ def with_holt(df: DataFrame, cfg: PipelineConfig, col: str,
         + [StructField(pre + "_level", DoubleType()),
            StructField(pre + "_trend", DoubleType())]
     )
-    sp = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    nb = max(sp * 4, 64)
-    bucketed = df.withColumn("_hwb", F.pmod(F.xxhash64(key), F.lit(nb)).cast("int"))
+    bucketed = ordering.super_group(df, key, "_hwb")
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.drop(columns=["_hwb"])
@@ -444,8 +347,8 @@ def with_trailing_rank(
     Plan shape: every window size shares ONE partition-sort (same spec as
     the rolling family); each rank is a collect_list frame plus a JVM
     higher-order filter/size and an integer div — no Python stage. Per-row
-    cost is O(w), the native order-stats class; a bulk-throughput twin
-    belongs in the vectorized kernel via the identical sliding comparison.
+    cost is O(w); order_stats.trailing_rank_kernel is the numpy form of the
+    identical sliding comparison.
     """
     if col is None:
         col = F.length("text")

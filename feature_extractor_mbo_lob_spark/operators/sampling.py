@@ -97,9 +97,7 @@ def volume_sample_flag_exact(
         return pdf
 
     # super-grouping: one Arrow batch per conversation bucket (not per key)
-    sp = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    nb = max(sp * 4, 64)
-    bucketed = df.withColumn("_vsb", F.pmod(F.xxhash64(key), F.lit(nb)).cast("int"))
+    bucketed = ordering.super_group(df, key, "_vsb")
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.drop(columns=["_vsb"])

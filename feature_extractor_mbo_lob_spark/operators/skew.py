@@ -146,7 +146,7 @@ def build_features_skewed(df: DataFrame, cfg: PipelineConfig,
     from . import order_stats as os_mod
 
     base = os_mod.with_order_stats_pandas(base, ccfg)
-    rolled = rolling.with_rolling_features(base, ccfg, include_order_stats=False)
+    rolled = rolling.with_rolling_features(base, ccfg)
 
     if with_labels:
         from ..labeling import tlob_labels

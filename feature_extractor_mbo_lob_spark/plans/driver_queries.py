@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from ..config import LabelConfig, PipelineConfig
 from ..contract import DIVISION_GUARD_EPS, MIN_DURATION_S
 from ..labeling import tlob_labels
-from ..operators import asof, ordering, sampling, state, rolling
+from ..operators import asof, order_stats, ordering, sampling, state, rolling
 from ..sources.transcripts import ORACLE_TRANSCRIPTS_CTE, transcripts_from_events
 
 CFG = PipelineConfig(
@@ -95,7 +95,8 @@ window w as ({_OWIN}), cum as ({_CUM})
 def q_rolling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = transcripts_from_events(spark, sf_dir)
     cfg = PipelineConfig(window_sizes=(8,))
-    s = rolling.with_rolling_features(state.with_state_features(t, cfg), cfg)
+    s = state.with_state_features(t, cfg)
+    s = rolling.with_rolling_features(order_stats.with_order_stats_pandas(s, cfg), cfg)
     return s.select(
         "conv_id",
         "turn_idx",
@@ -1786,15 +1787,13 @@ ORACLES["ivf_topk_sharded"] = O_IVF_TOPK
 # --- feature 58: order-flow volatility (std of net flow over 10 sub-windows) --------
 
 def q_flow_volatility(spark, sf_dir):
-    """Feature 58 via the numpy bucket kernel (throughput path; the JVM HOF
-    twin rides the rolling_window native path and is tested bit-identical)."""
-    from ..operators import order_stats as os_mod
-
+    """Feature 58 via the numpy bucket stage (operators/order_stats.py), the
+    one implementation every flagship plan runs."""
     t = transcripts_from_events(spark, sf_dir)
     cfg = PipelineConfig(window_sizes=(32,))
     lean = t.select("conv_id", "turn_idx", "ts", "role",
                     F.coalesce(F.length("text"), F.lit(0)).cast("double").alias("char_len"))
-    s = os_mod.with_order_stats_pandas(lean, cfg, flow_vol=True)
+    s = order_stats.with_order_stats_pandas(lean, cfg)
     return s.select("conv_id", "turn_idx", _r6(F.col("flow_volatility_w32"), "flow_vol"))
 
 

@@ -1,11 +1,12 @@
 """End-to-end feature plans.
 
 The reference's Pipeline::process loop (src/pipeline.rs:606-736) restated as
-one declarative DataFrame pipeline: scan -> filter -> stateful window columns
--> rolling frames -> sample filter -> label frames -> align join. Catalyst
-owns the physical plan; every window shares the identical
-partitionBy(conv_id).orderBy(turn_idx, ts) spec so the whole feature stage is
-ONE shuffle + sort followed by fused window execs.
+one declarative DataFrame pipeline: scan -> filter -> frame-bound features
+(one numpy bucket stage, operators/order_stats.py) -> stateful window columns
+-> rolling prefix sums -> label frames. Catalyst owns the physical plan;
+every window shares the identical partitionBy(conv_id).orderBy(turn_idx, ts)
+spec so the whole window cascade is ONE shuffle + sort followed by fused
+window execs.
 """
 
 from __future__ import annotations
@@ -16,7 +17,7 @@ from pyspark.sql import functions as F
 from .. import contract
 from ..config import PipelineConfig
 from ..labeling import tlob_labels
-from ..operators import rolling, state
+from ..operators import order_stats, rolling, state
 
 
 def r6(c):
@@ -40,8 +41,8 @@ def clean_input(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     )
 
 
-def build_features(df: DataFrame, cfg: PipelineConfig, validate: bool = True,
-                   narrow: bool = False, order_stats: str = "pandas") -> DataFrame:
+def build_features(df: DataFrame, cfg: PipelineConfig,
+                   narrow: bool = False) -> DataFrame:
     """Full point-in-time feature frame: contract columns + passthrough keys.
 
     Zero temporal leakage by construction: every feature window frame ends at
@@ -53,50 +54,37 @@ def build_features(df: DataFrame, cfg: PipelineConfig, validate: bool = True,
     (memory bandwidth is the scaling ceiling of the window stage).
     """
     df = clean_input(df, cfg)
+    char_len = F.coalesce(F.length("text"), F.lit(0)).cast("double")
     if narrow:
-        df = df.select(
-            cfg.key_col,
-            *cfg.order_cols,
-            "role",
-            F.coalesce(F.length("text"), F.lit(0)).cast("double").alias("char_len"),
-        )
-    if order_stats == "pandas":
-        # hottest computation first, vectorized-numpy per conversation
-        # (operators/order_stats.py) — then the JVM window cascade
-        from ..operators import order_stats as os_mod
-
-        if "char_len" not in df.columns:
-            df = df.withColumn(
-                "char_len", F.coalesce(F.length("text"), F.lit(0)).cast("double")
-            )
-        df = os_mod.with_order_stats_pandas(df, cfg)
-    elif order_stats != "native":
-        raise ValueError(f"unknown order_stats impl {order_stats}")
-
+        df = df.select(cfg.key_col, *cfg.order_cols, "role", char_len.alias("char_len"))
+    elif "char_len" not in df.columns:
+        df = df.withColumn("char_len", char_len)
+    # hottest computation first, vectorized numpy per conversation bucket
+    # (frame-bound features) — then the JVM window cascade
+    df = order_stats.with_order_stats_pandas(df, cfg)
     df = state.with_state_features(df, cfg)
     df = state.with_sessions(df, cfg)
     df = state.with_time_regime(df, cfg)
-    df = rolling.with_rolling_features(
-        df, cfg, include_order_stats=(order_stats == "native")
-    )
-    if validate:
-        contract.validate_feature_frame(df.columns, cfg.window_sizes)
+    df = rolling.with_rolling_features(df, cfg)
+    contract.validate_feature_frame(df.columns, cfg.window_sizes)
     return df
 
 
 def max_conv_turns(df: DataFrame) -> int:
-    """Longest conversation in the corpus — the auto-skew routing probe.
-    turn_idx is dense 0-based per conversation (transcript contract), so
-    max(turn_idx)+1 answers it without a groupBy.
+    """Longest conversation in the corpus: the skew routing probe of the
+    job, flagship_pipeline and vectorized_flagship. turn_idx is dense 0-based
+    per conversation (transcript contract), so max(turn_idx)+1 answers it
+    without a groupBy.
 
-    Fast path: when df is backed by local parquet files (≤256 of them),
-    the max comes straight from the parquet FOOTER column statistics on
-    the driver — zero Spark jobs, ~1 ms/file. Footer stats bound the
-    UNFILTERED data, so for a filtered df this can only over-estimate —
-    which at worst routes through the (bit-identical) skew path, never the
-    reverse. Fallback: one map-side-combined max over the pruned int
-    column (v1 parquet scans don't support aggregate pushdown, so this
-    costs a ~0.15 s scan job on a 600K-row corpus)."""
+    Only the fast path is free: when df is backed by local parquet files
+    (≤256 of them), the max comes straight from the parquet FOOTER column
+    statistics on the driver — zero Spark jobs, ~1 ms/file. Footer stats
+    bound the UNFILTERED data, so for a filtered df this can only
+    over-estimate — which at worst routes through the (bit-identical) skew
+    path, never the reverse. Otherwise it is one Spark job: a
+    map-side-combined max over the pruned int column, which scans the
+    column (parquet is a v1 source here, so no aggregate is pushed into the
+    scan; ~0.15 s on a 600K-row corpus)."""
     try:
         files = df.inputFiles()
     except Exception:
@@ -164,61 +152,30 @@ def flagship_pipeline(
     df: DataFrame,
     cfg: PipelineConfig | None = None,
     price_col: str = "char_len",
-    strategy: str = "fused",
-    auto_skew: bool = True,
 ) -> DataFrame:
     """The minimum-slice end-to-end query (SURVEY §7): features + TLOB
     labels on the per-turn scalar timeline, aligned per (conv_id, turn_idx).
 
-    strategy='fused' (default, the scale plan): label forward-frames share
-    the feature stage's partitionBy/orderBy, so Catalyst folds everything
-    into ONE shuffle+sort — no second scan, no join. This is the plan you
-    want at 100 TB.
+    Label forward-frames share the feature stage's partitionBy/orderBy, so
+    Catalyst folds everything into ONE shuffle+sort — no second scan, no
+    join. Labels that come from a different table are aligned with the
+    as-of join operator (operators/asof.py) instead.
 
-    strategy='join': labels built as a separate timeline and aligned via an
-    inner equi join on (conv_id, turn_idx) — mirrors the reference's
-    separate alignment step (src/export_aligned/alignment.rs:136-173, a
-    sort-merge join on co-partitioned sides). Kept for parity testing and
-    as the shape used when labels genuinely come from a different table
-    (then: the as-of join operator).
-
-    Both strategies produce identical rows (tested).
-
-    auto_skew=True (default) probes the longest conversation (one map-side
-    max over a pruned int column) and routes the whole corpus through
-    flagship_skewed when it exceeds cfg.skew_max_turns_per_task — a
+    Skew route: when max_conv_turns exceeds cfg.skew_max_turns_per_task the
+    whole corpus goes through flagship_skewed (identical rows, tested) — a
     10M-turn conversation otherwise becomes one straggler task that caps
     cluster scaling (AQE cannot split Window execs).
     """
     cfg = cfg or PipelineConfig()
-    if auto_skew and max_conv_turns(df) > cfg.skew_max_turns_per_task:
+    if max_conv_turns(df) > cfg.skew_max_turns_per_task:
         return flagship_skewed(df, cfg, price_col=price_col)
     # narrow when the label timeline derives from char_len (output carries no
     # raw text, so the window sort never has to move it)
     feats = build_features(df, cfg, narrow=(price_col == "char_len"))
-
-    if strategy == "fused":
-        price = F.col("char_len") if price_col == "char_len" else F.col(price_col)
-        out = tlob_labels(feats.withColumn("_p", price), cfg, price_col="_p").filter(
-            F.col("label").isNotNull()
-        )
-    elif strategy == "join":
-        raw_price = (
-            F.coalesce(F.length("text"), F.lit(0)).cast("double")
-            if price_col == "char_len"
-            else F.col(price_col)
-        )
-        labels = tlob_labels(
-            df.select(cfg.key_col, *cfg.order_cols, raw_price.alias("_p")),
-            cfg,
-            price_col="_p",
-        ).select(cfg.key_col, "turn_idx", "label", "label_pct_change")
-        out = feats.join(labels, on=[cfg.key_col, "turn_idx"], how="inner").filter(
-            F.col("label").isNotNull()
-        )
-    else:
-        raise ValueError(f"unknown strategy {strategy}")
-
+    price = F.col("char_len") if price_col == "char_len" else F.col(price_col)
+    out = tlob_labels(feats.withColumn("_p", price), cfg, price_col="_p").filter(
+        F.col("label").isNotNull()
+    )
     return out.select(
         cfg.key_col,
         "turn_idx",

@@ -34,6 +34,7 @@ from ..contract import (
     SCHEMA_VERSION,
     feature_columns,
 )
+from ..operators import ordering
 from ..operators.order_stats import _bucket_order_stats, flow_vol_from_sig
 from .pipeline import max_conv_turns
 
@@ -213,23 +214,20 @@ def _kernel(pdf: pd.DataFrame, cfg: PipelineConfig, price_from_char_len: bool) -
 
 
 def vectorized_flagship(df: DataFrame, cfg: PipelineConfig | None = None,
-                        price_col: str = "char_len",
-                        n_buckets: int | None = None,
-                        auto_skew: bool = True) -> DataFrame:
-    """Single-pass compiled twin of flagship_pipeline(strategy='fused').
-    Returns identical rows (tested).
+                        price_col: str = "char_len") -> DataFrame:
+    """Single-pass compiled twin of flagship_pipeline. Returns identical rows
+    (tested).
 
-    auto_skew=True probes the longest conversation (one map-side max over a
-    pruned int column). If any conversation exceeds
-    cfg.skew_max_turns_per_task, those conversations' ids (a tiny list —
-    one groupBy row per conversation, filtered) are split out through the
-    chunked declarative path (plans.flagship_skewed, bit-identical rows)
-    and unioned back; everything else stays on this kernel. A mega
-    conversation otherwise lands whole in one Arrow bucket — an
-    unsplittable straggler + memory spike.
+    Skew route: max_conv_turns probes the longest conversation. If any
+    conversation exceeds cfg.skew_max_turns_per_task, those conversations'
+    ids (a tiny list — one groupBy row per conversation, filtered) are split
+    out through the chunked declarative path (plans.flagship_skewed,
+    bit-identical rows) and unioned back; everything else stays on this
+    kernel. A mega conversation otherwise lands whole in one Arrow bucket —
+    an unsplittable straggler + memory spike.
     """
     cfg = cfg or PipelineConfig()
-    if auto_skew and max_conv_turns(df) > cfg.skew_max_turns_per_task:
+    if max_conv_turns(df) > cfg.skew_max_turns_per_task:
         from .pipeline import flagship_skewed
 
         mega = [
@@ -240,9 +238,8 @@ def vectorized_flagship(df: DataFrame, cfg: PipelineConfig | None = None,
             .select(cfg.key_col)
             .collect()
         ]
-        rest = vectorized_flagship(
-            df.filter(~F.col(cfg.key_col).isin(mega)), cfg,
-            price_col=price_col, n_buckets=n_buckets, auto_skew=False,
+        rest = _bucketed_kernel(
+            df.filter(~F.col(cfg.key_col).isin(mega)), cfg, price_col
         )
         skewed = flagship_skewed(
             df.filter(F.col(cfg.key_col).isin(mega)), cfg, price_col=price_col
@@ -252,18 +249,18 @@ def vectorized_flagship(df: DataFrame, cfg: PipelineConfig | None = None,
             *[F.col(f.name).cast(f.dataType) for f in rest.schema.fields]
         )
         return rest.unionByName(skewed)
+    return _bucketed_kernel(df, cfg, price_col)
+
+
+def _bucketed_kernel(df: DataFrame, cfg: PipelineConfig, price_col: str) -> DataFrame:
+    """_kernel over every conversation of df: one shuffle to super-group
+    buckets, one Arrow batch per bucket."""
     cols = [cfg.key_col, *cfg.order_cols, "role",
             F.coalesce(F.length("text"), F.lit(0)).cast("double").alias("char_len")]
     if price_col != "char_len":
         cols.append(F.col(price_col).alias("_p"))
     narrow = df.select(*cols)
-
-    if n_buckets is None:
-        sp = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-        n_buckets = max(sp * 4, 64)
-    bucketed = narrow.withColumn(
-        "_vb", F.pmod(F.xxhash64(cfg.key_col), F.lit(n_buckets)).cast("int")
-    )
+    bucketed = ordering.super_group(narrow, cfg.key_col, "_vb")
 
     fcols = feature_columns(cfg.window_sizes)
     ts_type = narrow.schema[cfg.ts_col].dataType.simpleString()

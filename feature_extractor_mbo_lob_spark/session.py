@@ -73,9 +73,6 @@ def get_spark(
         # form; the sort path writes one data file + index per map task at
         # any R (guide §2.2 "fewer, larger blocks")
         .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-        # answer bare min/max/count aggregates from parquet footer stats —
-        # makes the flagship's skew probe (max(turn_idx)) metadata-only
-        .config("spark.sql.parquet.aggregatePushdown", "true")
         # Arrow transfer for every pandas UDF / applyInPandas
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")

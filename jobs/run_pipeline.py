@@ -20,7 +20,9 @@ Local smoke:
         --input-format events --output /tmp/fex_out --buckets 4
 
 Reads the transcript table, builds the full point-in-time feature frame
-(+ TLOB labels), validates (NaN gate, contract width), and exports
+(+ TLOB labels; through the chunked skew route when the longest
+conversation exceeds the config's skew_max_turns_per_task), validates (NaN
+gate, contract width), and exports
 partitioned parquet with per-bucket lineage manifests. Re-running with
 --resume skips buckets whose manifests match config + input snapshot.
 Emits one JSON line of run metrics (rows, wall, throughput) to stdout.
@@ -48,8 +50,6 @@ def main() -> None:
     ap.add_argument("--config", default=None, help="PipelineConfig JSON file")
     ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--resume", action="store_true")
-    ap.add_argument("--skewed", action="store_true",
-                    help="use chunked carry-in windows for mega-conversations")
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
@@ -61,6 +61,7 @@ def main() -> None:
     from feature_extractor_mbo_lob_spark.labeling import tlob_labels
     from feature_extractor_mbo_lob_spark.operators.skew import build_features_skewed
     from feature_extractor_mbo_lob_spark.plans import build_features
+    from feature_extractor_mbo_lob_spark.plans.pipeline import clean_input, max_conv_turns
     from feature_extractor_mbo_lob_spark.sources import (
         read_transcripts,
         transcripts_from_events,
@@ -90,12 +91,17 @@ def main() -> None:
     else:
         df = read_transcripts(spark, args.input, fmt=args.input_format)
 
-    feats = (
-        build_features_skewed(df, cfg) if args.skewed else build_features(df, cfg)
-    )
-    labeled = tlob_labels(
-        feats.withColumn("_p", F.col("char_len")), cfg, price_col="_p"
-    ).drop("_p")
+    # skew route chosen from the data, as in flagship_pipeline: chunked
+    # carry-in windows, labels included (forward-context rows), when one
+    # conversation would be a straggler task; on parquet input the probe
+    # reads only the footers
+    if max_conv_turns(df) > cfg.skew_max_turns_per_task:
+        labeled = build_features_skewed(clean_input(df, cfg), cfg, with_labels=True)
+    else:
+        labeled = tlob_labels(
+            build_features(df, cfg).withColumn("_p", F.col("char_len")), cfg,
+            price_col="_p",
+        ).drop("_p")
 
     val.assert_feature_contract(labeled, cfg)
     val.assert_no_nan_inf(labeled, cfg.feature_columns())

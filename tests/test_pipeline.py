@@ -88,12 +88,6 @@ def test_state_isolation_between_conversations(spark, transcripts):
     assert a == b
 
 
-def test_fused_equals_join_strategy(transcripts):
-    a = _collect_sorted(flagship_pipeline(transcripts, CFG, strategy="fused"))
-    b = _collect_sorted(flagship_pipeline(transcripts, CFG, strategy="join"))
-    assert a == b
-
-
 def test_profile_table(spark):
     from feature_extractor_mbo_lob_spark.validation import profile_table
 

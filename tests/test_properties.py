@@ -18,7 +18,7 @@ from feature_extractor_mbo_lob_spark.contract import (
 )
 from feature_extractor_mbo_lob_spark.labeling.triple_barrier import _label_group
 from feature_extractor_mbo_lob_spark.operators.order_stats import (
-    _group_order_stats,
+    _bucket_order_stats,
     flow_vol_from_sig,
 )
 
@@ -143,24 +143,38 @@ def test_triple_barrier_kernel_matches_bruteforce(prices, pt, sl, horizon):
 
 @settings(max_examples=60, deadline=None)
 @given(
-    xs=st.lists(
-        st.floats(min_value=0.0, max_value=1e6, allow_nan=False), min_size=1, max_size=80
+    convs=st.lists(
+        st.lists(st.floats(min_value=0.0, max_value=1e6, allow_nan=False),
+                 min_size=1, max_size=50),
+        min_size=1, max_size=4,
     ),
     w=st.integers(min_value=1, max_value=40),
 )
-def test_order_stats_percentiles_match_naive(xs, w):
-    x = np.array(xs)
-    got = _group_order_stats(x, w)
-    for i in range(len(x)):
-        frame = sorted(xs[max(0, i - w + 1): i + 1])
-        m = len(frame)
-        for q, key in ((0.25, "char_p25"), (0.5, "char_p50"), (0.9, "char_p90")):
-            idx = (m - 1) * q
-            lo = int(math.floor(idx))
-            frac = idx - lo
-            hi = min(lo + 1, m - 1)
-            want = frame[lo] + frac * (frame[hi] - frame[lo])
-            assert abs(got[key][i] - want) < 1e-9 * max(1.0, abs(want))
+def test_order_stats_percentiles_match_naive(convs, w):
+    """The production kernel on a bucket of concatenated conversations:
+    every row's percentiles and large-turn ratio equal the naive frame of
+    its own conversation (frames never cross a conversation boundary)."""
+    sizes = np.array([len(c) for c in convs])
+    starts = np.concatenate([[0], np.cumsum(sizes)[:-1]])
+    got = _bucket_order_stats(np.concatenate(convs), starts, starts + sizes, w)
+    row = 0
+    for xs in convs:
+        for i in range(len(xs)):
+            frame = sorted(xs[max(0, i - w + 1): i + 1])
+            m = len(frame)
+            want = {}
+            for q in (0.25, 0.5, 0.75, 0.9):
+                idx = (m - 1) * q
+                lo = int(math.floor(idx))
+                hi = min(lo + 1, m - 1)
+                want[q] = frame[lo] + (idx - lo) * (frame[hi] - frame[lo])
+            for q, key in ((0.25, "char_p25"), (0.5, "char_p50"),
+                           (0.75, "char_p75"), (0.9, "char_p90")):
+                assert abs(got[key][row] - want[q]) < 1e-9 * max(1.0, abs(want[q]))
+            ratio = sum(v > got["char_p90"][row] for v in frame) / m
+            assert got["large_turn_ratio"][row] == ratio
+            row += 1
+    assert row == len(got["char_p50"])
 
 
 # --------------------------------------------------------------------------

@@ -1,5 +1,6 @@
 """Hand-computed rolling window features (population std / moment skew / HHI
-conventions per contract)."""
+conventions per contract), through build_features: the prefix-sum window
+cascade plus the numpy stage for the frame-bound features."""
 
 import datetime as dt
 import math
@@ -8,7 +9,7 @@ import pytest
 from pyspark.sql import Row
 
 from feature_extractor_mbo_lob_spark.config import PipelineConfig
-from feature_extractor_mbo_lob_spark.operators import rolling, state
+from feature_extractor_mbo_lob_spark.plans import build_features
 
 T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
 LENS = [4, 10, 7, 1, 12]  # text lengths per turn
@@ -27,7 +28,7 @@ def rolled(spark):
         ],
         schema=TRANSCRIPT_SCHEMA,
     )
-    out = rolling.with_rolling_features(state.with_state_features(df, cfg), cfg)
+    out = build_features(df, cfg)
     return {r.turn_idx: r for r in out.collect()}
 
 
@@ -108,7 +109,7 @@ def test_flow_volatility_golden(spark):
          for i in range(25)],
         schema=TRANSCRIPT_SCHEMA,
     )
-    out = rolling.with_rolling_features(state.with_state_features(df, cfg), cfg)
+    out = build_features(df, cfg)
     got = {r.turn_idx: r.flow_volatility_w25 for r in out.collect()}
 
     s = [1.0 if r == "user" else (-1.0 if r == "assistant" else 0.0) for r in roles]

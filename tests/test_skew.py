@@ -87,7 +87,7 @@ def test_flagship_auto_skew_routing_identical(corpus):
         return {(r["conv_id"], r["turn_idx"]): [r[c] for c in cols[2:]]
                 for r in df.collect()}
 
-    plain = grid(flagship_pipeline(corpus, CFG, auto_skew=False))
+    plain = grid(flagship_pipeline(corpus, CFG))
     routed = grid(flagship_pipeline(corpus, cfg))            # probe trips
     direct = grid(flagship_skewed(corpus, cfg))
     vec = grid(vectorized_flagship(corpus, cfg))             # split+union path
@@ -107,3 +107,47 @@ def test_add_chunks_forward_context(spark):
     )
     # first 2 turns of chunks 1 and 2 copied back into chunks 0 and 1
     assert fwd == [(0, 10), (0, 11), (1, 20), (1, 21)]
+
+
+def test_job_picks_skew_route_from_data(corpus, tmp_path):
+    """jobs/run_pipeline.py routes through build_features_skewed when the
+    longest conversation exceeds cfg.skew_max_turns_per_task, and exports
+    the same rows as with the default threshold. Subprocesses, because
+    main() stops its session."""
+    import json
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    from feature_extractor_mbo_lob_spark.plans.pipeline import max_conv_turns
+
+    src = tmp_path / "corpus"
+    corpus.write.parquet(str(src))
+    job = Path(__file__).resolve().parent.parent / "jobs" / "run_pipeline.py"
+
+    def run(name, **overrides):
+        conf = tmp_path / f"{name}.json"
+        conf.write_text(json.dumps({"window_sizes": [4, 8], **overrides}))
+        out = tmp_path / name
+        r = subprocess.run(
+            [sys.executable, str(job), "--input", str(src), "--output", str(out),
+             "--config", str(conf), "--buckets", "2", "--master", "local[2]"],
+            capture_output=True, text=True, timeout=420,
+        )
+        assert r.returncode == 0, r.stderr[-3000:]
+        report = json.loads(r.stdout.strip().splitlines()[-1])
+        assert report["rows_out"] == report["rows_in"] == corpus.count()
+        return pq.read_table(out).to_pandas()
+
+    assert max_conv_turns(corpus) == 300
+    plain = run("plain")
+    routed = run("routed", skew_max_turns_per_task=50)
+    # the chunked route builds its columns in another order: proof it ran
+    assert list(plain.columns) != list(routed.columns)
+    assert sorted(plain.columns) == sorted(routed.columns)
+    keys = ["conv_id", "turn_idx"]
+    plain = plain.sort_values(keys).reset_index(drop=True)
+    routed = routed[plain.columns].sort_values(keys).reset_index(drop=True)
+    assert plain.equals(routed)

@@ -91,11 +91,14 @@ def main() -> None:
 
     sections.append(summarize(
         "pushdown + pruning probe",
-        build_features(t, CFG, narrow=True, order_stats="native")
+        build_features(t, CFG)
         .filter(F.col("conv_id") == "c42")
         .select("conv_id", "turn_idx", "char_mean_w8"),
-        "Key-filter must appear in the scan's DataFilters; ReadSchema must "
-        "drop `role`/`tool` (only text->char_len is needed).",
+        "The default build_features, as the job runs it. The bucketed "
+        "order-stats Arrow stage (FlatMapGroupsInPandas) is a barrier: the "
+        "key filter stays above it (only the null checks of clean_input "
+        "reach the scan's DataFilters), and the scan reads every column, "
+        "`tool` included, because the stage returns its whole input row.",
     ))
 
     labels = t.filter(F.col("role") == "tool").select(
