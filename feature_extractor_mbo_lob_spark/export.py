@@ -18,6 +18,7 @@ bucket (idempotent).
 
 from __future__ import annotations
 
+import hashlib
 import json
 import time
 from dataclasses import asdict, dataclass
@@ -25,6 +26,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .config import PipelineConfig
 from .guards import collect_at_most
@@ -45,6 +47,13 @@ class PartitionManifest:
     wall_sec: float
     rows_per_sec: float
     written_at_unix: float
+
+
+def schema_digest(schema: StructType) -> str:
+    """The manifest's ``schema_version``: the first 8 hex digits of sha256
+    over ``schema.simpleString()`` — the same value in every process
+    (``str.__hash__`` is salted per process)."""
+    return hashlib.sha256(schema.simpleString().encode()).hexdigest()[:8]
 
 
 def with_bucket(df: DataFrame, cfg: PipelineConfig, n_buckets: int) -> DataFrame:
@@ -149,7 +158,7 @@ def export_with_manifests(
             value_checksum=v["checksum"],
             config_hash=cfg_hash,
             input_fingerprint=input_fingerprint,
-            schema_version=str(df.schema.simpleString().__hash__() & 0xFFFFFFFF),
+            schema_version=schema_digest(df.schema),
             wall_sec=round(wall, 3),
             rows_per_sec=round(v["rows"] / wall, 1) if wall > 0 else 0.0,
             written_at_unix=time.time(),
@@ -167,8 +176,6 @@ def export_with_manifests(
 def input_fingerprint_for_path(spark: SparkSession, path: str) -> str:
     """Cheap input snapshot id: file listing + sizes + mtimes hashed.
     (With Iceberg this is simply the snapshot id.)"""
-    import hashlib
-
     p = Path(path)
     h = hashlib.sha256()
     if p.is_file():

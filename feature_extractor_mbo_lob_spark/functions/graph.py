@@ -20,19 +20,24 @@ Scale shape (100 TB): the edge list never leaves O(buckets^2) rows after
 the first aggregation, so the rounds finish on the driver in exact
 Python integers after one bounded collect (``_collect_edges``, cap
 ``MAX_DRIVER_EDGES``, ValueError past it) — no per-document work after
-edge extraction.
+edge extraction. The same finish serves every fixed-round graph
+iteration here: pagerank_int, hits_int, the Markov chain, k-core peel,
+label propagation, modularity and BFS hop layers each collect their
+edge list once, iterate in Python integers and return one local
+relation.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..guards import collect_at_most
 from ..operators.dedup import normalize_text
 
 # Edge lists the graph finishes collect to the driver (pagerank_int,
-# hits_int, the Markov chain); every caller passes an aggregated bucket,
-# role or tool graph, O(nodes²) rows by construction.
+# hits_int, the Markov chain, kcore_peel, label_propagation, modularity,
+# bfs_hops); every caller passes an aggregated bucket, role, tool or
+# pruned word-adjacency graph, O(nodes²) rows by construction.
 MAX_DRIVER_EDGES = 200_000
 
 
@@ -47,6 +52,22 @@ def _collect_edges(edges: DataFrame, what: str) -> list:
             "calling."
         )
     return rows
+
+
+def _collect_pairs(
+    edges: DataFrame, a_col: str, b_col: str, w_col: str | None, what: str
+):
+    """(node type, [(a, b, w)]) of an edge list: rows with a null endpoint
+    dropped, then ``_collect_edges``; ``w`` is the long-cast ``w_col``, or
+    1 when ``w_col`` is None."""
+    w = F.col(w_col).cast("long") if w_col else F.lit(1).cast("long")
+    rows = _collect_edges(
+        edges.filter(F.col(a_col).isNotNull() & F.col(b_col).isNotNull())
+        .select(F.col(a_col).alias("a"), F.col(b_col).alias("b"), w.alias("w")),
+        what,
+    )
+    node_type = edges.select(a_col).schema[0].dataType.simpleString()
+    return node_type, [(r["a"], r["b"], r["w"]) for r in rows]
 
 
 def _bucket(c: F.Column, buckets: int) -> F.Column:
@@ -131,14 +152,8 @@ def pagerank_int(
 
     Returns ``DataFrame[node: string, rank_micro: long]``.
     """
-    edges = edges.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-    rows = _collect_edges(
-        edges.select("src", "dst", F.col("w").cast("long").alias("w")),
-        "pagerank_int",
-    )
+    node_type, e = _collect_pairs(edges, "src", "dst", "w", "pagerank_int")
     spark = edges.sparkSession
-    node_type = edges.schema["src"].dataType.simpleString()
-    e = [(r["src"], r["dst"], int(r["w"])) for r in rows]
     schema = f"node {node_type}, rank_micro long"
     if not e:
         return spark.createDataFrame([], schema=schema)
@@ -410,15 +425,12 @@ def hits_int(
 
     Returns ``DataFrame[node, hub_micro: long, auth_micro: long]``.
     """
-    edges = edges.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-    rows = _collect_edges(edges.select("src", "dst", "w"), "hits_int")
+    node_type, e = _collect_pairs(edges, "src", "dst", "w", "hits_int")
     spark = edges.sparkSession
-    schema = f"node {dict(edges.dtypes)['src']}, hub_micro long, auth_micro long"
-    if not rows:
+    schema = f"node {node_type}, hub_micro long, auth_micro long"
+    if not e:
         return spark.createDataFrame([], schema=schema)
-    src = [r["src"] for r in rows]
-    dst = [r["dst"] for r in rows]
-    w = [int(r["w"]) for r in rows]
+    src, dst, w = zip(*e)
     nodes = sorted(set(src) | set(dst))
     init = scale // len(nodes)
     h = {v: init for v in nodes}
@@ -550,65 +562,45 @@ def kcore_peel(
     within the current surviving subgraph is < k, then recomputes
     degrees. ``rounds`` is fixed and unrolled — the graph-curation
     analog of the repo's bounded-iteration rule (pagerank_int,
-    hits_int): deterministic plan depth, no convergence-dependent
-    lineage. With enough rounds this converges to the exact k-core;
-    the per-node ``peel_round`` (1-indexed removal round, 0 = survived
-    all rounds) is itself the useful curation signal — a coreness-style
-    centrality used to keep well-connected vocabulary / drop stragglers.
+    hits_int): deterministic depth, no convergence test. With enough
+    rounds this converges to the exact k-core; the per-node
+    ``peel_round`` (1-indexed removal round, 0 = survived all rounds) is
+    itself the useful curation signal — a coreness-style centrality used
+    to keep well-connected vocabulary / drop stragglers.
+
+    Degree semantics: every edge row counts once per endpoint occurrence
+    (multi-edges count each time); a surviving node that loses every edge
+    has degree 0. Edges with a null endpoint are dropped first.
 
     Engine-exactness: pure integer degree counts and set membership —
     any engine reproduces every row bit-identically.
 
-    Scale shape: the edge list localCheckpoints ONCE (never per round —
-    the graph-iteration lineage rule); each round is two left-semi joins
-    (hash-partitioned on the node key) plus one partial-aggregable
-    degree count over the shrinking edge set. No cross join, no Python.
+    Scale shape: the edge list (a pruned vocabulary-pair graph) finishes
+    on the driver: one bounded collect (``_collect_edges``, cap
+    ``MAX_DRIVER_EDGES``, ValueError past it), the rounds in Python
+    integers, one local relation out.
+
+    Returns ``DataFrame[node, deg0: long, peel_round: int]``.
     """
-    from functools import reduce
+    node_type, e = _collect_pairs(edges, a_col, b_col, None, "kcore_peel")
 
-    e = edges.select(
-        F.col(a_col).alias("a"), F.col(b_col).alias("b")
-    ).localCheckpoint(eager=True)
+    def degrees(ed: list, nodes) -> dict:
+        deg = dict.fromkeys(nodes, 0)
+        for a, b, _w in ed:
+            deg[a] += 1
+            deg[b] += 1
+        return deg
 
-    def degrees(ed: DataFrame, nodes: DataFrame | None = None) -> DataFrame:
-        inc = ed.select(F.col("a").alias("node")).union(
-            ed.select(F.col("b").alias("node"))
-        )
-        d = inc.groupBy("node").agg(F.count(F.lit(1)).cast("long").alias("deg"))
-        if nodes is None:
-            return d
-        return nodes.join(d, "node", "left").select(
-            "node", F.coalesce("deg", F.lit(0)).cast("long").alias("deg")
-        )
-
-    deg0 = degrees(e).localCheckpoint(eager=True)
-    surv = deg0
-    cur_e = e
-    peeled_frames = []
+    deg0 = degrees(e, {v for a, b, _w in e for v in (a, b)})
+    surv, peeled = deg0, {}
     for r in range(1, int(rounds) + 1):
-        peeled_frames.append(
-            surv.filter(F.col("deg") < k).select(
-                "node", F.lit(r).cast("int").alias("peel_round")
-            )
-        )
-        keep = surv.filter(F.col("deg") >= k).select("node")
-        # NOTE(r6): broadcast-hinting the keep/degree/peeled node frames
-        # measured SLOWER than the shuffle joins (each broadcast build
-        # re-executes its growing per-round lineage; shuffle exchanges are
-        # reused across rounds) — hints removed after A/B.
-        cur_e = cur_e.join(
-            keep.withColumnRenamed("node", "a"), "a", "leftsemi"
-        ).join(keep.withColumnRenamed("node", "b"), "b", "leftsemi")
-        surv = degrees(cur_e, keep)
-    peeled = reduce(DataFrame.union, peeled_frames)
-    return (
-        deg0.select("node", F.col("deg").alias("deg0"))
-        .join(peeled, "node", "left")
-        .select(
-            "node",
-            "deg0",
-            F.coalesce("peel_round", F.lit(0)).cast("int").alias("peel_round"),
-        )
+        keep = {v for v, d in surv.items() if d >= k}
+        peeled.update((v, r) for v in surv.keys() - keep)
+        e = [x for x in e if x[0] in keep and x[1] in keep]
+        surv = degrees(e, keep)
+    return edges.sparkSession.createDataFrame(
+        [(v, deg0[v], peeled.get(v, 0)) for v in sorted(deg0)],
+        schema=f"node {node_type}, deg0 long, peel_round int",
     )
 
 
@@ -630,53 +622,37 @@ def label_propagation(
     adopts the label with the greatest total incident edge weight among
     its neighbors' current labels, ties broken by the lexicographically
     SMALLEST label — fully deterministic, no RNG, no convergence test
-    (bounded plan depth, the bounded-iteration rule shared by
-    pagerank_int/hits_int/kcore_peel). Fixed rounds make synchronous
-    oscillation harmless: the output is a pure function of the input.
+    (the bounded-iteration rule shared by pagerank_int/hits_int/
+    kcore_peel). Fixed rounds make synchronous oscillation harmless: the
+    output is a pure function of the input. Edges with a null endpoint
+    are dropped first.
 
     Engine-exactness: integer weight sums + (sum DESC, label ASC)
-    argmax — any engine reproduces every row bit-identically.
+    argmax; Python string order is Spark's UTF-8 byte order, so any
+    engine reproduces every row bit-identically.
 
-    Scale shape: the directed edge view localCheckpoints ONCE (the
-    graph-iteration lineage rule, see MEMORY); each round is one
-    hash join on the destination node + one partial-aggregable
-    (node, label) weight sum + one per-node top-1 window — all keyed on
-    the node column, no cross join, no Python. Frame sizes are bounded
-    by |edges| and |nodes| (vocab-pair bounded upstream), never corpus
-    rows.
+    Scale shape: the edge list (bounded by the pruned vocabulary, never
+    corpus rows) finishes on the driver: one bounded collect
+    (``_collect_edges``, cap ``MAX_DRIVER_EDGES``, ValueError past it),
+    the rounds in Python integers, one local relation out.
 
-    Returns ``DataFrame[node: string, community: string]``.
+    Returns ``DataFrame[node, community]``.
     """
-    e = (
-        edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"),
-                     F.col(w_col).cast("long").alias("w"))
-        .union(
-            edges.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"),
-                         F.col(w_col).cast("long").alias("w"))
-        )
-    ).localCheckpoint(eager=True)
-    labels = e.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").alias("community")
-    )
+    node_type, e = _collect_pairs(edges, a_col, b_col, w_col, "label_propagation")
+    both = e + [(b, a, w) for a, b, w in e]
+    label = {s: s for s, _d, _w in both}
     for _ in range(int(rounds)):
-        # NOTE(r6): measured variants — broadcast-hinting the label table
-        # and/or replacing the top-1 window with a min-struct aggregate
-        # were all SLOWER here (broadcast builds re-execute the growing
-        # label lineage each round; the shuffle form reuses exchanges).
-        # The original join + window stays.
-        scored = (
-            e.join(labels, e["dst"] == labels["node"])
-            .select(F.col("src"), F.col("community").alias("lab"), F.col("w"))
-            .groupBy("src", "lab")
-            .agg(F.sum("w").alias("s"))
-        )
-        win = Window.partitionBy("src").orderBy(F.col("s").desc(), F.col("lab").asc())
-        labels = (
-            scored.withColumn("_rn", F.row_number().over(win))
-            .filter(F.col("_rn") == 1)
-            .select(F.col("src").alias("node"), F.col("lab").alias("community"))
-        )
-    return labels
+        score: dict = {}
+        for s, d, w in both:
+            score[s, label[d]] = score.get((s, label[d]), 0) + w
+        best: dict = {}
+        for (s, lab), tot in score.items():
+            if s not in best or (-tot, lab) < best[s]:
+                best[s] = (-tot, lab)
+        label = {s: lab for s, (_neg, lab) in best.items()}
+    return edges.sparkSession.createDataFrame(
+        sorted(label.items()), schema=f"node {node_type}, community {node_type}"
+    )
 
 
 def modularity(
@@ -695,60 +671,50 @@ def modularity(
     structural fingerprints (triangle_stats, kcore_peel, assortativity)
     with an assignment-conditional score.
 
-    Exact integer form: with the directed view (both orientations),
-    M = 2m = total directed weight, deg_c = total strength of nodes in
-    community c, in_c = directed weight with BOTH endpoints in c,
+    Exact integer form: with the directed view (both orientations) of the
+    edges whose endpoints both carry a label, M = 2m = total directed
+    weight, deg_c = total strength of nodes in community c, in_c =
+    directed weight with BOTH endpoints in c,
 
         Q = sum_c (in_c/M - (deg_c/M)^2)
           = [ sum_c (in_c * M - deg_c^2) ] / M^2.
 
-    The numerator is summed as exact decimal(38,0) integers (hugeint on
-    the oracle side); the release is ONE signed trunc division
-    q_micro = (1e6 * num) div M^2 — both engines truncate toward zero
-    (similarity.py:878 convention), so the result is bit-identical.
+    The numerator is an exact Python integer (hugeint on the oracle
+    side); the release is ONE signed division truncated toward zero,
+    q_micro = (1e6 * num) div M^2 (similarity.py:878 convention), so the
+    row is bit-identical on both engines. No edges: (NULL, 0, NULL, NULL).
 
-    Scale shape: two node-keyed broadcast-able joins decorating each
-    directed edge with its endpoint communities, one partial-aggregable
-    per-community sum, one 1-row broadcast of M. Everything is bounded
-    by |edges| and |communities| — never corpus rows. No Python stages.
+    Scale shape: the edge list and the label table finish on the driver,
+    each through one bounded collect (``_collect_edges``, cap
+    ``MAX_DRIVER_EDGES``, ValueError past it); the per-community sums
+    run in Python integers, one local relation out.
 
     Returns one row ``(m2, n_communities, in_total, q_micro)``.
     """
-    e = edges.select(
-        F.col(a_col).alias("src"), F.col(b_col).alias("dst"),
-        F.col(w_col).cast("long").alias("w"),
+    _node_type, e = _collect_pairs(edges, a_col, b_col, w_col, "modularity")
+    lab = dict(
+        _collect_edges(labels.select(node_col, community_col), "modularity")
     )
-    e = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w"))
-    lab = labels.select(
-        F.col(node_col).alias("_n"), F.col(community_col).alias("_c")
-    )
-    dec = (
-        e.join(lab.select(F.col("_n").alias("src"), F.col("_c").alias("c_src")), "src")
-        .join(lab.select(F.col("_n").alias("dst"), F.col("_c").alias("c_dst")), "dst")
-    )
-    per_c = dec.groupBy("c_src").agg(
-        F.sum("w").cast("decimal(38,0)").alias("deg_c"),
-        F.sum(F.when(F.col("c_src") == F.col("c_dst"), F.col("w")).otherwise(F.lit(0)))
-        .cast("decimal(38,0)")
-        .alias("in_c"),
-    )
-    m_row = per_c.agg(F.sum("deg_c").cast("decimal(38,0)").alias("m2_d"))
-    out = (
-        per_c.crossJoin(F.broadcast(m_row))
-        .agg(
-            F.max("m2_d").alias("m2_d"),
-            F.count(F.lit(1)).cast("long").alias("n_communities"),
-            F.sum("in_c").cast("decimal(38,0)").alias("in_d"),
-            F.sum(F.col("in_c") * F.col("m2_d") - F.col("deg_c") * F.col("deg_c"))
-            .cast("decimal(38,0)")
-            .alias("num"),
-        )
-    )
-    return out.select(
-        F.col("m2_d").cast("long").alias("m2"),
-        "n_communities",
-        F.col("in_d").cast("long").alias("in_total"),
-        F.expr("cast((num * 1000000) div (m2_d * m2_d) as bigint)").alias("q_micro"),
+    deg_c: dict = {}
+    in_c: dict = {}
+    for a, b, w in e:
+        for s, d in ((a, b), (b, a)):
+            if s in lab and d in lab:
+                c = lab[s]
+                deg_c[c] = deg_c.get(c, 0) + w
+                # a null community is its own group but never "inside" it
+                inside = c is not None and c == lab[d]
+                in_c[c] = in_c.get(c, 0) + (w if inside else 0)
+    row = (None, 0, None, None)
+    if deg_c:
+        m2 = sum(deg_c.values())
+        num = sum(in_c[c] * m2 - deg_c[c] * deg_c[c] for c in deg_c)
+        q = None
+        if m2:
+            q = abs(num) * 1_000_000 // (m2 * m2) * (1 if num >= 0 else -1)
+        row = (m2, len(deg_c), sum(in_c.values()), q)
+    return edges.sparkSession.createDataFrame(
+        [row], schema="m2 long, n_communities long, in_total long, q_micro long"
     )
 
 
@@ -933,51 +899,44 @@ def bfs_hops(
     reachability/diameter probe of the graph family (pagerank answers
     "how central", k-core "how dense"; this answers "how far").
 
-    The seed is the max-weighted-degree node (ties → node asc): an
-    argmax over the degree aggregate, never a user-supplied magic id,
-    so the query is self-contained and reproducible. Frontier expansion
-    runs ``max_depth`` unrolled rounds: neighbors of the current layer,
-    LEFT ANTI against everything already labeled — first visit IS the
-    minimum hop count, so no min-aggregation pass is needed. Every
-    frame is node-bounded (the edge list is the largest relation —
-    node-keyed equi joins only, no cartesian); each layer is
-    localCheckpoint-ed to keep the unrolled lineage flat, the
-    label-propagation / kcore precedent.
+    The seed is the max-weighted-degree node over both orientations
+    (ties → node asc): an argmax over the degrees, never a user-supplied
+    magic id, so the query is self-contained and reproducible. Edges
+    with a null endpoint are dropped first. Frontier expansion runs
+    ``max_depth`` unrolled rounds: neighbors of the current layer not
+    yet labeled — first visit IS the minimum hop count, so no
+    min-aggregation pass is needed.
 
     Unreached nodes are absent from the output (the caller left-joins
     the node frame if "infinite" rows are wanted). DuckDB twin: one
     WITH RECURSIVE over the same undirected adjacency with dist <
     max_depth, min(dist) per node.
 
+    Scale shape: the edge list (a tool or vocabulary graph) finishes on
+    the driver: one bounded collect (``_collect_edges``, cap
+    ``MAX_DRIVER_EDGES``, ValueError past it), the layers as Python
+    sets, one local relation out.
+
     Reference analog: workflow-graph diagnostics over the tool-usage
     projection (SURVEY §2 graph family).
+
+    Returns ``DataFrame[node, dist: long]``.
     """
-    w = (F.col(weight_col).cast("long") if weight_col
-         else F.lit(1).cast("long"))
-    directed = edges.select(
-        F.col(a_col).alias("src"), F.col(b_col).alias("dst"), w.alias("w")
+    node_type, e = _collect_pairs(edges, a_col, b_col, weight_col, "bfs_hops")
+    adj: dict = {}
+    deg: dict = {}
+    for a, b, w in e:
+        for s, d in ((a, b), (b, a)):
+            adj.setdefault(s, set()).add(d)
+            deg[s] = deg.get(s, 0) + w
+    frontier = {min(deg, key=lambda v: (-deg[v], v))} if deg else set()
+    dist = dict.fromkeys(frontier, 0)
+    for hop in range(1, int(max_depth) + 1):
+        frontier = {v for u in frontier for v in adj[u]} - dist.keys()
+        dist.update(dict.fromkeys(frontier, hop))
+    return edges.sparkSession.createDataFrame(
+        sorted(dist.items()), schema=f"node {node_type}, dist long"
     )
-    und = directed.union(
-        directed.select(F.col("dst").alias("src"),
-                        F.col("src").alias("dst"), "w")
-    )
-    adj = und.select("src", "dst").distinct().localCheckpoint(eager=False)
-    deg = und.groupBy("src").agg(F.sum("w").alias("dw"))
-    seed = deg.orderBy(F.col("dw").desc(), F.col("src").asc()).limit(1)
-    dist = seed.select(
-        F.col("src").alias("node"), F.lit(0).cast("long").alias("dist")
-    ).localCheckpoint(eager=False)
-    for d in range(max_depth):
-        frontier = dist.where(F.col("dist") == d)
-        nxt = (
-            frontier.join(adj, frontier["node"] == adj["src"])
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(dist, "node", "left_anti")
-            .select("node", F.lit(d + 1).cast("long").alias("dist"))
-        )
-        dist = dist.union(nxt).localCheckpoint(eager=False)
-    return dist
 
 
 def moran_geary(

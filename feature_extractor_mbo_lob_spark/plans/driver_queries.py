@@ -14120,7 +14120,8 @@ def q_kcore_peel(spark, sf_dir):
     >= 3 times): per word, its initial degree and the 1-indexed round it
     was peeled (0 = in the surviving core) — the coreness-style
     vocabulary-curation signal, exact integer set arithmetic on both
-    engines."""
+    engines. Spark builds the edge list; the peel finishes on the
+    driver in Python integers (one bounded collect)."""
     from ..functions import graph
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -14855,9 +14856,9 @@ def q_label_propagation(spark, sf_dir):
     label_propagation) over the pruned word-adjacency graph: each word's
     community after three deterministic max-weight / min-label adoption
     rounds — the community-detection leg of the graph-curation family
-    (pagerank / HITS / triangles / k-core). Edge list localCheckpointed
-    once; each round one node-keyed join + partial-aggregable weight sum
-    + per-node top-1 window."""
+    (pagerank / HITS / triangles / k-core). Spark builds the edge list;
+    the rounds finish on the driver in Python integers (one bounded
+    collect)."""
     from ..functions import graph
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -16272,20 +16273,17 @@ def q_modularity(spark, sf_dir):
     over the pruned word-adjacency graph (functions/graph.modularity) —
     the chance-corrected quality meter for the community assignment
     (the graph twin of ari / v_measure for the certified k-means).
-    Exact decimal(38,0) numerator sum_c(in_c*M - deg_c^2), one signed
-    trunc division releases q_micro; both engines truncate toward zero
-    so the row is bit-identical. Two node-keyed joins + one
-    partial-aggregable per-community sum + a 1-row M broadcast —
-    bounded by |edges|, never corpus rows. r6: the edge list is
-    materialized ONCE (localCheckpoint) so the docs scan + word-pair
-    aggregation is not recomputed by the LPA lineage and the modularity
-    decoration separately, and the final label table is materialized
-    once before its two endpoint joins (the r5 materialize-once rule)."""
+    Exact integer numerator sum_c(in_c*M - deg_c^2), one signed trunc
+    division releases q_micro; both engines truncate toward zero so the
+    row is bit-identical. Both label propagation and modularity finish
+    on the driver; the edge list is materialized ONCE (localCheckpoint)
+    because both collect it, so the docs scan + word-pair aggregation
+    runs once."""
     from ..functions import graph
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     edges = graph.word_adjacency_edges(docs, min_count=3).localCheckpoint(eager=False)
-    labels = graph.label_propagation(edges, rounds=3).localCheckpoint(eager=False)
+    labels = graph.label_propagation(edges, rounds=3)
     return graph.modularity(edges, labels)
 
 
@@ -18902,9 +18900,10 @@ def q_bfs_hops(spark, sf_dir):
     co-usage graph from the max-weighted-degree tool (ties → name asc)
     — the reachability probe of the graph family; first visit IS the
     minimum hop, so the unrolled frontier expansion needs no min pass.
-    The oracle replays it as ONE DuckDB WITH RECURSIVE over the same
-    undirected adjacency — the iterative-Spark ↔ recursive-SQL
-    equivalence certificate."""
+    Spark builds the co-usage edge list; the layers finish on the driver
+    (one bounded collect). The oracle replays them as ONE DuckDB WITH
+    RECURSIVE over the same undirected adjacency — the driver-loop ↔
+    recursive-SQL equivalence certificate."""
     from ..functions.graph import bfs_hops
 
     t = transcripts_from_events(spark, sf_dir)

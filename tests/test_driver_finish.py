@@ -5,8 +5,9 @@
 * Forced-branch parity: the routing user (``connected_components``:
   driver union-find below its cap, Pregel-style loop past it) gives
   bit-identical output on both branches, degenerate rows included.
-* Degenerate input on the driver finishes: null endpoints are dropped and
-  a zero-out-weight source still counts as a node.
+* Degenerate input on the driver finishes: null endpoints are dropped, a
+  zero-out-weight source still counts as a node, and an empty edge list
+  gives no rows (one all-null row for the one-row modularity).
 * Guards: the operators that always finish on the driver raise a
   ValueError naming themselves past their module-level cap.
 * Vector corpora (GEMM index, DBSCAN sample) are sized column-free and
@@ -94,11 +95,34 @@ def _components(spark):
     return dedup.connected_components(df)
 
 
+# the undirected graph finishes, on an (a, b, w) edge frame
+_UNDIRECTED = {
+    "kcore_peel": lambda e: graph.kcore_peel(e),
+    "label_propagation": lambda e: graph.label_propagation(e),
+    "bfs_hops": lambda e: graph.bfs_hops(e, weight_col="w"),
+    "modularity": lambda e: graph.modularity(e, graph.label_propagation(e)),
+}
+
+
+def _undirected(name, rows):
+    return lambda spark: _UNDIRECTED[name](
+        spark.createDataFrame(rows, "a string, b string, w long")
+    )
+
+
 # driver finish -> (frame factory, output keys after dropping null rows)
 _DRIVER_ONLY = {
     "pagerank_int": (_pagerank, {"a", "b", "c", "z"}),
     "hits_int": (_hits, {"a", "b", "c", "z"}),
     "bradley_terry": (_bradley_terry, {"a", "b", "c", "d"}),
+    "kcore_peel": (_undirected("kcore_peel", _EDGES), {"a", "b", "c", "z"}),
+    "label_propagation": (
+        _undirected("label_propagation", _EDGES), {"a", "b", "c", "z"}
+    ),
+    # the null node would tie b at weighted degree 9 and seed the search
+    "bfs_hops": (_undirected("bfs_hops", _EDGES), {"a", "b", "c", "z"}),
+    # m2 = 2 * (3 + 1 + 2 + 1 + 0): the null-endpoint weights are not counted
+    "modularity": (_undirected("modularity", _EDGES), {14}),
 }
 _ROUTED = {
     "connected_components": (_components, dedup, "MAX_DRIVER_PAIRS", {1, 2, 3, 5, 6, 9}),
@@ -110,6 +134,25 @@ def test_driver_finish_degenerate_keys(spark, name):
     build, keys = _DRIVER_ONLY[name]
     # null endpoints are dropped; a zero-weight source still counts as a node
     assert {r[0] for r in build(spark).collect()} == keys
+
+
+def test_kcore_peel_degrees_ignore_null_endpoints(spark):
+    rows = _undirected("kcore_peel", _EDGES)(spark).collect()
+    # a-b, b-c, c-a, a-c, z-a: multi-edges count once per occurrence
+    assert {r.node: r.deg0 for r in rows} == {"a": 4, "b": 2, "c": 3, "z": 1}
+
+
+@pytest.mark.parametrize(
+    "name, rows",
+    [
+        ("bfs_hops", []),
+        ("kcore_peel", []),
+        ("label_propagation", []),
+        ("modularity", [(None, 0, None, None)]),
+    ],
+)
+def test_graph_finish_empty_edge_list(spark, name, rows):
+    assert [tuple(r) for r in _undirected(name, [])(spark).collect()] == rows
 
 
 @pytest.mark.parametrize("name", sorted(_ROUTED))
@@ -138,12 +181,17 @@ def test_routed_branches_bit_identical(spark, monkeypatch, name):
         (graph, "MAX_DRIVER_EDGES", "hits_int"),
         (graph, "MAX_DRIVER_EDGES", "markov_stationary"),
         (graph, "MAX_DRIVER_EDGES", "markov_entropy_rate"),
+        (graph, "MAX_DRIVER_EDGES", "kcore_peel"),
+        (graph, "MAX_DRIVER_EDGES", "label_propagation"),
+        (graph, "MAX_DRIVER_EDGES", "bfs_hops"),
+        (graph, "MAX_DRIVER_EDGES", "modularity"),
         (stats, "MAX_BT_PAIRS", "bradley_terry"),
         (evalmetrics, "MAX_CONTINGENCY_CELLS", "v_measure"),
         (evalmetrics, "MAX_CONTINGENCY_CELLS", "adjusted_rand_index"),
     ],
 )
 def test_driver_finish_raises_past_cap(spark, monkeypatch, module, cap, fn):
+    kw = {}
     if module is evalmetrics:
         df = spark.createDataFrame([(0, "x"), (1, "y")], "k int, c string")
         args = (df, "k", "c")
@@ -153,10 +201,17 @@ def test_driver_finish_raises_past_cap(spark, monkeypatch, module, cap, fn):
         )
         # bradley_terry reads its (winner, loser) pairs from src, dst
         args = (df,) if module is graph else (df, "src", "dst")
-    getattr(module, fn)(*args).collect()  # within the default cap
+        if fn in _UNDIRECTED:  # these read their endpoints from a_col, b_col
+            kw = {"a_col": "src", "b_col": "dst"}
+        if fn == "modularity":
+            labels = spark.createDataFrame(
+                [("a", "a"), ("b", "a")], "node string, community string"
+            )
+            args = (df, labels)
+    getattr(module, fn)(*args, **kw).collect()  # within the default cap
     monkeypatch.setattr(module, cap, 0)
     with pytest.raises(ValueError, match=fn):
-        getattr(module, fn)(*args)
+        getattr(module, fn)(*args, **kw)
 
 
 # ---------------------------------------------------------------------------

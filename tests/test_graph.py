@@ -360,3 +360,81 @@ def test_rich_club_clique_plus_leaf(spark):
     assert rows2[2].phi_ppm == 10 ** 6
     # k=1: club {a?,b,c,d?}: degrees a=1,d=1,x=1,y=1 -> club {b,c}, same
     assert rows2[1].n_nodes == 2 and rows2[1].n_edges == 1
+
+
+# --- driver finishes vs the DuckDB oracles on random graphs with structure --------
+
+
+def _random_graph(seed):
+    """6-25 nodes in 1-3 dense groups with sparse bridges; integer weights
+    in {3, 4, 5}, so weight sums and weighted degrees tie often."""
+    import random
+
+    rng = random.Random(seed)
+    n = rng.randint(6, 25)
+    groups = rng.randint(1, 3)
+    names = [f"w{i:02d}" for i in range(n)]
+    edges = []
+    for i in range(n):
+        for j in range(i + 1, n):
+            p = 0.5 if i % groups == j % groups else 0.06
+            if rng.random() < p:
+                edges.append((names[i], names[j], rng.choice((3, 3, 4, 5))))
+    return rng, edges
+
+
+def _duckdb_rows(sql, **tables):
+    import pandas as pd
+    import pytest
+
+    duckdb = pytest.importorskip("duckdb")
+    con = duckdb.connect()
+    try:
+        for name, rows in tables.items():
+            con.register(name, pd.DataFrame(rows[1], columns=rows[0]))
+        return sorted(con.execute(sql).fetchall())
+    finally:
+        con.close()
+
+
+def test_graph_finishes_match_duckdb_oracles_on_random_graphs(spark):
+    """Each edge (x, y, w) is w documents "x y" (or "y x"), so the Spark
+    query path word_adjacency_edges(min_count=3) -> function and the
+    registry oracles read the same graph from the same documents."""
+    from feature_extractor_mbo_lob_spark.plans.driver_queries import (
+        O_BFS_HOPS,
+        O_MODULARITY,
+        _kcore_oracle,
+        _lpa_oracle,
+    )
+
+    bfs_tail = "with recursive e as (select a as ta, b as tb, w from edges),\n"
+    bfs_tail += O_BFS_HOPS[O_BFS_HOPS.index("und as ("):]
+    max_communities = max_peel = 0
+    for seed in range(10):
+        rng, pairs = _random_graph(seed)
+        assert pairs
+        texts = [
+            f"{x} {y}" if rng.random() < 0.5 else f"{y}  {x}"
+            for x, y, w in pairs for _ in range(w)
+        ]
+        docs = spark.createDataFrame([(t,) for t in texts], "text string")
+        edges = graph.word_adjacency_edges(docs, min_count=3).localCheckpoint()
+        documents = (("text",), [(t,) for t in texts])
+        got = lambda df: sorted(tuple(r) for r in df.collect())
+
+        kcore = got(graph.kcore_peel(edges, k=3, rounds=3))
+        assert kcore == _duckdb_rows(_kcore_oracle(), documents=documents), seed
+        labels = graph.label_propagation(edges, rounds=3)
+        lpa = got(labels)
+        assert lpa == _duckdb_rows(_lpa_oracle(), documents=documents), seed
+        mod = got(graph.modularity(edges, labels))
+        assert mod == _duckdb_rows(O_MODULARITY, documents=documents), seed
+        bfs = got(graph.bfs_hops(edges, weight_col="w", max_depth=4))
+        assert bfs == _duckdb_rows(bfs_tail, edges=(("a", "b", "w"), pairs)), seed
+
+        max_communities = max(max_communities, mod[0][1])
+        max_peel = max(max_peel, max(r[2] for r in kcore))
+    # the graphs exercise the tie-breaks and the peel order, not one community
+    assert max_communities >= 2
+    assert max_peel >= 2

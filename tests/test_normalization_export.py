@@ -14,6 +14,7 @@ from feature_extractor_mbo_lob_spark.export import (
     export_with_manifests,
     input_fingerprint_for_path,
     manifest_path,
+    schema_digest,
     valid_buckets,
 )
 
@@ -108,6 +109,7 @@ def test_export_manifests_and_resume(tmp_path, frame):
     assert m["config_hash"] == CFG.config_hash()
     assert m["input_fingerprint"] == fp
     assert m["rows"] > 0 and m["value_checksum"]
+    assert m["schema_version"] == schema_digest(frame.schema)
 
     # resume: same config+input -> everything skipped
     rep2 = export_with_manifests(frame, CFG, out_dir, fp, n_buckets=4)
@@ -121,6 +123,32 @@ def test_export_manifests_and_resume(tmp_path, frame):
     spark = frame.sparkSession
     back = spark.read.parquet(out_dir)
     assert back.count() == 20
+
+
+def test_schema_digest_stable_across_processes(frame):
+    """str hashes are salted per process; the manifest's schema_version
+    must not be."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "import json;"
+        "from pyspark.sql.types import StructType;"
+        "from feature_extractor_mbo_lob_spark.export import schema_digest;"
+        f"print(schema_digest(StructType.fromJson(json.loads({frame.schema.json()!r}))))"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONHASHSEED"}
+    root = str(Path(__file__).resolve().parent.parent)
+    got = [
+        subprocess.run(
+            [sys.executable, "-c", code], cwd=root, env=env,
+            capture_output=True, text=True, check=True,
+        ).stdout.strip()
+        for _ in range(2)
+    ]
+    assert got[0] == got[1] == schema_digest(frame.schema)
+    assert len(got[0]) == 8
 
 
 def test_valid_buckets_rejects_config_change(tmp_path, frame):

@@ -1088,13 +1088,13 @@ def main() -> None:
     ))
 
     sections.append(summarize(
-        "k-core peel (3 fixed rounds)",
+        "k-core peel (3 fixed rounds, driver finish)",
         kcore_peel(word_adjacency_edges(docs, min_count=2), k=3, rounds=3),
-        "Edges localCheckpoint ONCE (the graph-iteration lineage rule); "
-        "each round is two left-semi hash joins over the shrinking edge "
-        "set + one partial-aggregable degree count. Fixed unrolled depth "
-        "— no convergence-dependent lineage, no python.",
-        forbid=("CartesianProduct", "BroadcastNestedLoop", "BatchEvalPython",
+        "The pruned word-adjacency edge list is collected once "
+        "(graph._collect_edges, cap graph.MAX_DRIVER_EDGES) and the fixed "
+        "peel rounds run on the driver in Python integers. The result is "
+        "a driver-built local relation: no stage, no per-round join.",
+        forbid=("CartesianProduct", "BatchEvalPython", "Exchange",
                 "FlatMapGroupsInPandas", "MapInPandas"),
     ))
 
@@ -1230,14 +1230,14 @@ def main() -> None:
 
     lp_docs = t.select(F.col("text")).limit(200)
     sections.append(summarize(
-        "Label propagation communities (3 rounds)",
+        "Label propagation communities (3 rounds, driver finish)",
         label_propagation(word_adjacency_edges(lp_docs, min_count=2), rounds=3),
-        "Directed edge view localCheckpoints ONCE (graph-iteration "
-        "lineage rule); each unrolled round = one node-keyed hash join + "
-        "one partial-aggregable (node, label) weight sum + one per-node "
-        "top-1 window — all frames bounded by the pruned vocab-pair edge "
-        "list, never corpus rows.",
-        forbid=("CartesianProduct", "BatchEvalPython",
+        "The pruned word-adjacency edge list is collected once "
+        "(graph._collect_edges, cap graph.MAX_DRIVER_EDGES) and the fixed "
+        "rounds run on the driver in Python integers, (weight sum DESC, "
+        "label ASC) argmax. The result is a driver-built local relation: "
+        "no stage, no per-round join or window.",
+        forbid=("CartesianProduct", "BatchEvalPython", "Exchange",
                 "FlatMapGroupsInPandas", "MapInPandas"),
     ))
 
@@ -1567,13 +1567,14 @@ def main() -> None:
 
     mod_edges = word_adjacency_edges(lp_docs, min_count=2)
     sections.append(summarize(
-        "Modularity of the label-propagation communities",
+        "Modularity of the label-propagation communities (driver finish)",
         modularity(mod_edges, label_propagation(mod_edges, rounds=3)),
-        "Two node-keyed joins decorate each directed edge with endpoint "
-        "communities, one partial-aggregable per-community sum, one 1-row "
-        "M broadcast (bounded BNLJ), ONE signed trunc division at release "
-        "— bounded by |edges| and |communities|, never corpus rows.",
-        forbid=("CartesianProduct", "BatchEvalPython",
+        "The edge list and the label table are each collected once "
+        "(graph._collect_edges, cap graph.MAX_DRIVER_EDGES); the "
+        "per-community sums and the ONE signed trunc division run on the "
+        "driver in Python integers. The result is a driver-built 1-row "
+        "local relation.",
+        forbid=("CartesianProduct", "BatchEvalPython", "Exchange",
                 "FlatMapGroupsInPandas", "MapInPandas"),
     ))
 
@@ -2118,13 +2119,14 @@ def main() -> None:
     ))
 
     sections.append(summarize(
-        "single-source BFS hop layers",
+        "single-source BFS hop layers (driver finish)",
         QUERIES["bfs_hops"](spark, tiny),
-        "Unrolled frontier expansion over the node-bounded tool graph: "
-        "node-keyed equi joins only, LEFT ANTI gives first-visit = min "
-        "hop, every layer localCheckpointed so the 4-round lineage "
-        "stays flat. Oracle is ONE DuckDB WITH RECURSIVE.",
-        forbid=("CartesianProduct", "BatchEvalPython",
+        "The tool co-usage edge list is collected once "
+        "(graph._collect_edges, cap graph.MAX_DRIVER_EDGES); the seed "
+        "argmax and the 4 frontier layers run on the driver as Python "
+        "sets, first visit = min hop. The result is a driver-built local "
+        "relation. Oracle is ONE DuckDB WITH RECURSIVE.",
+        forbid=("CartesianProduct", "BatchEvalPython", "Exchange",
                 "FlatMapGroupsInPandas", "MapInPandas"),
     ))
 
