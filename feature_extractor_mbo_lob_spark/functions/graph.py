@@ -58,9 +58,10 @@ def _collect_pairs(
     edges: DataFrame, a_col: str, b_col: str, w_col: str | None, what: str
 ):
     """(node type, [(a, b, w)]) of an edge list: rows with a null endpoint
-    dropped, then ``_collect_edges``; ``w`` is the long-cast ``w_col``, or
-    1 when ``w_col`` is None."""
-    w = F.col(w_col).cast("long") if w_col else F.lit(1).cast("long")
+    dropped, then ``_collect_edges``; ``w`` is the long-cast ``w_col`` (a
+    null weight adds nothing, as in a SQL sum: 0), or 1 when ``w_col`` is
+    None."""
+    w = F.coalesce(F.col(w_col).cast("long"), F.lit(0)) if w_col else F.lit(1)
     rows = _collect_edges(
         edges.filter(F.col(a_col).isNotNull() & F.col(b_col).isNotNull())
         .select(F.col(a_col).alias("a"), F.col(b_col).alias("b"), w.alias("w")),

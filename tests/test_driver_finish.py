@@ -142,6 +142,12 @@ def test_kcore_peel_degrees_ignore_null_endpoints(spark):
     assert {r.node: r.deg0 for r in rows} == {"a": 4, "b": 2, "c": 3, "z": 1}
 
 
+@pytest.mark.parametrize("name", ["bfs_hops", "label_propagation", "modularity"])
+def test_graph_finish_null_weight_adds_nothing(spark, name):
+    null_w = _undirected(name, _EDGES + [("b", "z", None)])(spark).collect()
+    assert null_w == _undirected(name, _EDGES + [("b", "z", 0)])(spark).collect()
+
+
 @pytest.mark.parametrize(
     "name, rows",
     [
