@@ -11,28 +11,37 @@ resume.
 
 Partition unit: a deterministic bucket of conv_id (pmod(xxhash64(conv_id), n))
 — the Iceberg-partition analog that keeps each manifest's scope aligned with
-the shuffle partitioning, so resume granularity == work granularity. Writes
-use dynamic partition overwrite: re-running a bucket replaces exactly that
-bucket (idempotent).
+the shuffle partitioning, so resume granularity == work granularity. The
+frame's lineage runs once: it is written to a staging directory, the
+NaN/Inf/null gate and the per-bucket fingerprints are one aggregate over the
+staged files, and only a clean stage is committed, bucket by bucket, with a
+directory rename (the reference hard-errors the day; a failed gate commits
+nothing).
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
+import shutil
 import time
+import uuid
 from dataclasses import asdict, dataclass
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from .config import PipelineConfig
+from .contract import feature_columns
 from .guards import collect_at_most
+from .validation import ValidationError, bad_value_count
 
 MANIFEST_DIR = "_manifests"
 BUCKET_COL = "part_bucket"
+# a leading "_" hides the stage from parquet readers of out_dir
+STAGING_PREFIX = "_staging-"
 
 
 @dataclass
@@ -56,29 +65,35 @@ def schema_digest(schema: StructType) -> str:
     return hashlib.sha256(schema.simpleString().encode()).hexdigest()[:8]
 
 
+def bucket_of(cfg: PipelineConfig, n_buckets: int) -> Column:
+    """The export bucket of a row: pmod(xxhash64(key), n_buckets)."""
+    return F.pmod(F.xxhash64(cfg.key_col), F.lit(n_buckets)).cast("int")
+
+
 def with_bucket(df: DataFrame, cfg: PipelineConfig, n_buckets: int) -> DataFrame:
-    return df.withColumn(
-        BUCKET_COL, F.pmod(F.xxhash64(cfg.key_col), F.lit(n_buckets)).cast("int")
-    )
+    return df.withColumn(BUCKET_COL, bucket_of(cfg, n_buckets))
 
 
-def _bucket_fingerprints(df: DataFrame, cfg: PipelineConfig, cols: list[str]) -> dict[int, dict]:
-    """Per-bucket row count / key count / order-insensitive checksum in one
-    aggregate pass. Checksum = sum of xxhash64 over the stringified row — the
-    same trick the driver uses, cheap and associative."""
+def _staged_audit(staged: DataFrame, cfg: PipelineConfig, cols: list[str],
+                  gated: list[str]) -> tuple[dict[int, dict], dict[str, int]]:
+    """One aggregate over the staged files: per-bucket row count / key count
+    / order-insensitive checksum, and per gated column its NaN/Inf/null
+    count. Checksum = sum of xxhash64 over the row's typed values — cheap
+    and associative; it is compared only between runs of one version."""
     # decimal(38,0) accumulator: order-insensitive, associative, and immune
     # to ANSI long-overflow at any row count
-    rowhash = F.xxhash64(*[F.col(c).cast("string") for c in cols]).cast("decimal(38,0)")
+    rowhash = F.xxhash64(*[F.col(c) for c in cols]).cast("decimal(38,0)")
     agg = (
-        df.groupBy(BUCKET_COL)
+        staged.groupBy(BUCKET_COL)
         .agg(
             F.count(F.lit(1)).alias("rows"),
             F.countDistinct(cfg.key_col).alias("keys"),
             F.sum(rowhash).alias("checksum"),
+            *[bad_value_count(c).alias(f"_bad{i}") for i, c in enumerate(gated)],
         )
         .collect()
     )
-    return {
+    fps = {
         int(r[BUCKET_COL]): {
             "rows": int(r["rows"]),
             "keys": int(r["keys"]),
@@ -86,6 +101,8 @@ def _bucket_fingerprints(df: DataFrame, cfg: PipelineConfig, cols: list[str]) ->
         }
         for r in agg
     }
+    bad = {c: sum(int(r[f"_bad{i}"]) for r in agg) for i, c in enumerate(gated)}
+    return fps, {c: n for c, n in bad.items() if n}
 
 
 def manifest_path(out_dir: str, bucket: int) -> Path:
@@ -118,37 +135,62 @@ def export_with_manifests(
     resume: bool = True,
 ) -> dict:
     """Write df partitioned by conv-bucket with one lineage manifest per
-    bucket; on resume, buckets with a valid manifest are not fingerprinted
-    or written again. The skip is a filter on df's output, and Catalyst does
-    not push it below a grouped pandas stage: on the shipped job's plan it
-    sits above the order-stats FlatMapGroupsInPandas, so the feature stages
-    still run over the whole input.
+    bucket, running df's lineage once.
+
+    1. On resume, buckets with a valid manifest are skipped; when every
+       bucket is, nothing runs. The skip is a filter on df's output, which
+       Catalyst does not push below a grouped pandas stage, so a caller that
+       can prune its input should skip there (plans.vectorized.job_features
+       does).
+    2. The rest is written once, to a staging directory under out_dir.
+    3. One aggregate over the staged files gives each bucket's rows, keys
+       and checksum, and gates the contract feature columns present in df:
+       any NaN/Inf/null deletes the stage and raises ValidationError, so
+       nothing is committed and a prior export stays as it was.
+    4. Each staged bucket replaces ``part_bucket=k`` by a directory rename;
+       then its manifest is written.
 
     Returns a run report {written_buckets, skipped_buckets, rows, wall_sec}.
     """
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
     cfg_hash = cfg.config_hash()
-    bdf = with_bucket(df, cfg, n_buckets)
-
     done = valid_buckets(out_dir, cfg_hash, input_fingerprint) if resume else set()
-    todo = bdf.filter(~F.col(BUCKET_COL).isin(sorted(done))) if done else bdf
+    report = {"written_buckets": [], "skipped_buckets": sorted(done), "rows": 0,
+              "wall_sec": 0.0}
+    todo_buckets = set(range(n_buckets)) - done
+    if not todo_buckets:
+        return report
 
     t0 = time.time()
-    value_cols = [c for c in df.columns]
-    fps = _bucket_fingerprints(todo, cfg, value_cols)
-    if fps:
-        (
-            todo.repartition(max(len(fps), 1), BUCKET_COL)
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(out_dir)
-        )
+    bdf = with_bucket(df, cfg, n_buckets)
+    todo = bdf.filter(~F.col(BUCKET_COL).isin(sorted(done))) if done else bdf
+    out = Path(out_dir)
+    fresh_dir = not out.exists()
+    stage = out / f"{STAGING_PREFIX}{uuid.uuid4().hex}"
+    gated = [c for c in feature_columns(cfg.window_sizes) if c in df.columns]
+    try:
+        todo.repartition(len(todo_buckets), BUCKET_COL).write.partitionBy(
+            BUCKET_COL
+        ).parquet(str(stage))
+        fps: dict[int, dict] = {}
+        if any(stage.glob(f"{BUCKET_COL}=*")):
+            staged = df.sparkSession.read.schema(todo.schema).parquet(str(stage))
+            fps, bad = _staged_audit(staged, cfg, df.columns, gated)
+            if bad:
+                raise ValidationError(f"NaN/Inf/null in feature columns: {bad}")
+        for b in sorted(fps):
+            dst = out / f"{BUCKET_COL}={b}"
+            if dst.exists():
+                shutil.rmtree(dst)
+            (stage / f"{BUCKET_COL}={b}").rename(dst)
+    except BaseException:
+        shutil.rmtree(stage, ignore_errors=True)
+        if fresh_dir and out.exists() and not any(out.iterdir()):
+            out.rmdir()
+        raise
+    shutil.rmtree(stage, ignore_errors=True)
     wall = time.time() - t0
 
-    total_rows = sum(v["rows"] for v in fps.values())
-    mdir = Path(out_dir) / MANIFEST_DIR
+    mdir = out / MANIFEST_DIR
     mdir.mkdir(parents=True, exist_ok=True)
     for b, v in fps.items():
         m = PartitionManifest(
@@ -165,12 +207,10 @@ def export_with_manifests(
         )
         manifest_path(out_dir, b).write_text(json.dumps(asdict(m), indent=1))
 
-    return {
-        "written_buckets": sorted(fps),
-        "skipped_buckets": sorted(done),
-        "rows": total_rows,
-        "wall_sec": round(wall, 3),
-    }
+    report.update(written_buckets=sorted(fps),
+                  rows=sum(v["rows"] for v in fps.values()),
+                  wall_sec=round(wall, 3))
+    return report
 
 
 def input_fingerprint_for_path(spark: SparkSession, path: str) -> str:

@@ -683,14 +683,15 @@ def modularity(
     The numerator is an exact Python integer (hugeint on the oracle
     side); the release is ONE signed division truncated toward zero,
     q_micro = (1e6 * num) div M^2 (similarity.py:878 convention), so the
-    row is bit-identical on both engines. No edges: (NULL, 0, NULL, NULL).
+    row is bit-identical on both engines. No edge with two labelled
+    endpoints: no row, as the oracle's aggregate over no communities.
 
     Scale shape: the edge list and the label table finish on the driver,
     each through one bounded collect (``_collect_edges``, cap
     ``MAX_DRIVER_EDGES``, ValueError past it); the per-community sums
     run in Python integers, one local relation out.
 
-    Returns one row ``(m2, n_communities, in_total, q_micro)``.
+    Returns at most one row ``(m2, n_communities, in_total, q_micro)``.
     """
     _node_type, e = _collect_pairs(edges, a_col, b_col, w_col, "modularity")
     lab = dict(
@@ -706,16 +707,16 @@ def modularity(
                 # a null community is its own group but never "inside" it
                 inside = c is not None and c == lab[d]
                 in_c[c] = in_c.get(c, 0) + (w if inside else 0)
-    row = (None, 0, None, None)
+    rows = []
     if deg_c:
         m2 = sum(deg_c.values())
         num = sum(in_c[c] * m2 - deg_c[c] * deg_c[c] for c in deg_c)
         q = None
         if m2:
             q = abs(num) * 1_000_000 // (m2 * m2) * (1 if num >= 0 else -1)
-        row = (m2, len(deg_c), sum(in_c.values()), q)
+        rows.append((m2, len(deg_c), sum(in_c.values()), q))
     return edges.sparkSession.createDataFrame(
-        [row], schema="m2 long, n_communities long, in_total long, q_micro long"
+        rows, schema="m2 long, n_communities long, in_total long, q_micro long"
     )
 
 

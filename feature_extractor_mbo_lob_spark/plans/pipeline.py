@@ -128,16 +128,17 @@ def flagship_skewed(
     price_col: str = "char_len",
     chunk_turns: int | None = None,
 ) -> DataFrame:
-    """Skew-safe flagship: identical rows to flagship_pipeline (tested), but
-    mega-conversations are chunked (operators/skew.py) so no single task
-    ever holds more than ~chunk_turns rows. Labels are computed INSIDE the
-    chunked cascade via forward-context rows — no second pass, no join."""
+    """Skew-safe flagship: every input row, with flagship_pipeline's values
+    (tested) and null labels at conversation tails, but mega-conversations
+    are chunked (operators/skew.py) so no single task ever holds more than
+    ~chunk_turns rows. Labels are computed INSIDE the chunked cascade via
+    forward-context rows — no second pass, no join."""
     from ..operators.skew import build_features_skewed
 
     out = build_features_skewed(
         clean_input(df, cfg), cfg, chunk_turns=chunk_turns,
         with_labels=True, price_col=price_col,
-    ).filter(F.col("label").isNotNull())
+    )
     return out.select(
         cfg.key_col,
         "turn_idx",
@@ -168,7 +169,9 @@ def flagship_pipeline(
     """
     cfg = cfg or PipelineConfig()
     if max_conv_turns(df) > cfg.skew_max_turns_per_task:
-        return flagship_skewed(df, cfg, price_col=price_col)
+        return flagship_skewed(df, cfg, price_col=price_col).filter(
+            F.col("label").isNotNull()
+        )
     # narrow when the label timeline derives from char_len (output carries no
     # raw text, so the window sort never has to move it)
     feats = build_features(df, cfg, narrow=(price_col == "char_len"))

@@ -1,22 +1,27 @@
 """Single-pass vectorized pipeline — the reference's fused loop, distributed.
 
 The reference computes all features in ONE pass over the ordered stream with
-zero allocations (src/pipeline.rs:606-736, extract_into buffer reuse). The
-declarative plan (plans/pipeline.py) expresses the same thing as a Window
-cascade; this module is its compiled twin: one shuffle to conversation
+zero allocations (src/pipeline.rs:606-736, extract_into buffer reuse). This
+module is the engine that runs it on Spark: one shuffle to conversation
 buckets, one Arrow batch per bucket, and a numpy kernel that computes EVERY
 contract feature + TLOB labels with segment-aware prefix sums — all
 conversations in a bucket processed in single vectorized operations, no
-Python loop at any granularity.
+Python loop at any granularity. The shipped job (jobs/run_pipeline.py)
+builds its export frame here (job_features); the declarative Window cascade
+(plans/pipeline.py) stays as the readable specification the kernel is
+tested against.
 
-Output is bit-identical to flagship_pipeline (tested in
+The kernel keeps every input row: conversation tails, whose forward label
+frame is incomplete, carry null labels. vectorized_flagship drops them, and
+its rows are bit-identical to flagship_pipeline (tested in
 tests/test_vectorized.py): sums are exact integer arithmetic, all float
 expressions use the same formulas in the same order.
 
 Scale: each executor core processes buckets independently in an Arrow-fed
 numpy kernel — no shared-JVM sort-buffer bandwidth contention, which is what
-caps Window-cascade scaling on many-core nodes. Mega-conversations should be
-pre-chunked (operators/skew.py) to bound bucket size.
+caps Window-cascade scaling on many-core nodes. Conversations longer than
+cfg.skew_max_turns_per_task leave the kernel for the chunked cascade
+(plans.flagship_skewed), so no bucket holds an unsplittable straggler.
 """
 
 from __future__ import annotations
@@ -34,9 +39,10 @@ from ..contract import (
     SCHEMA_VERSION,
     feature_columns,
 )
+from ..export import bucket_of
 from ..operators import ordering
 from ..operators.order_stats import _bucket_order_stats, flow_vol_from_sig
-from .pipeline import max_conv_turns
+from .pipeline import clean_input, flagship_skewed, max_conv_turns
 
 
 def _segments(keys: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
@@ -151,7 +157,9 @@ def _kernel(pdf: pd.DataFrame, cfg: PipelineConfig, price_from_char_len: bool) -
         var = np.maximum(sum_x2 / cnt - mean * mean, 0.0)
         std = np.sqrt(var)
         m3 = sum_x3 / cnt - 3 * mean * (sum_x2 / cnt) + 2 * mean * mean * mean
-        skew = np.where((cnt < 3) | (std < MIN_STD), 0.0, m3 / (std * std * std))
+        # the guarded branch divides by a zero std; its quotient is discarded
+        with np.errstate(divide="ignore", invalid="ignore"):
+            skew = np.where((cnt < 3) | (std < MIN_STD), 0.0, m3 / (std * std * std))
         ssum_sq = sum_x * sum_x
         hhi = np.divide(sum_x2, ssum_sq, out=np.zeros(n), where=sum_x > 0)
 
@@ -210,51 +218,76 @@ def _kernel(pdf: pd.DataFrame, cfg: PipelineConfig, price_from_char_len: bool) -
         np.where(_mask, 0, label).astype(np.int8), _mask
     )
     res["label_pct_change"] = r6_np(l)
-    return res[~np.isnan(l)].reset_index(drop=True)
+    return res
 
 
 def vectorized_flagship(df: DataFrame, cfg: PipelineConfig | None = None,
                         price_col: str = "char_len") -> DataFrame:
-    """Single-pass compiled twin of flagship_pipeline. Returns identical rows
-    (tested).
+    """Single-pass engine of flagship_pipeline. Returns identical rows
+    (tested): the labelled ones, routed as kernel_routed routes them."""
+    cfg = cfg or PipelineConfig()
+    out, _ = kernel_routed(df, cfg, price_col)
+    return out.filter(F.col("label").isNotNull())
+
+
+def kernel_routed(df: DataFrame, cfg: PipelineConfig,
+                  price_col: str = "char_len") -> tuple[DataFrame, int]:
+    """Every row of df with the contract features and TLOB labels (null at
+    conversation tails), r6-rounded; returns (frame, number of mega
+    conversations).
 
     Skew route: max_conv_turns probes the longest conversation. If any
     conversation exceeds cfg.skew_max_turns_per_task, those conversations'
     ids (a tiny list — one groupBy row per conversation, filtered) are split
     out through the chunked declarative path (plans.flagship_skewed,
-    bit-identical rows) and unioned back; everything else stays on this
+    bit-identical rows) and unioned back; everything else stays on the
     kernel. A mega conversation otherwise lands whole in one Arrow bucket —
     an unsplittable straggler + memory spike.
     """
-    cfg = cfg or PipelineConfig()
-    if max_conv_turns(df) > cfg.skew_max_turns_per_task:
-        from .pipeline import flagship_skewed
+    if max_conv_turns(df) <= cfg.skew_max_turns_per_task:
+        return _bucketed_kernel(df, cfg, price_col), 0
+    mega = [
+        r[0]
+        for r in df.groupBy(cfg.key_col)
+        .agg(F.max("turn_idx").alias("_m"))
+        .filter(F.col("_m") >= cfg.skew_max_turns_per_task)
+        .select(cfg.key_col)
+        .collect()
+    ]
+    rest = _bucketed_kernel(df.filter(~F.col(cfg.key_col).isin(mega)), cfg, price_col)
+    skewed = flagship_skewed(
+        df.filter(F.col(cfg.key_col).isin(mega)), cfg, price_col=price_col
+    )
+    # align types to the kernel's output schema before the union
+    skewed = skewed.select(
+        *[F.col(f.name).cast(f.dataType) for f in rest.schema.fields]
+    )
+    return rest.unionByName(skewed), len(mega)
 
-        mega = [
-            r[0]
-            for r in df.groupBy(cfg.key_col)
-            .agg(F.max("turn_idx").alias("_m"))
-            .filter(F.col("_m") >= cfg.skew_max_turns_per_task)
-            .select(cfg.key_col)
-            .collect()
-        ]
-        rest = _bucketed_kernel(
-            df.filter(~F.col(cfg.key_col).isin(mega)), cfg, price_col
-        )
-        skewed = flagship_skewed(
-            df.filter(F.col(cfg.key_col).isin(mega)), cfg, price_col=price_col
-        )
-        # align types to this kernel's output schema before the union
-        skewed = skewed.select(
-            *[F.col(f.name).cast(f.dataType) for f in rest.schema.fields]
-        )
-        return rest.unionByName(skewed)
-    return _bucketed_kernel(df, cfg, price_col)
+
+def job_features(df: DataFrame, cfg: PipelineConfig, n_buckets: int,
+                 skip_buckets: set[int] | frozenset[int] = frozenset()
+                 ) -> tuple[DataFrame, dict]:
+    """The export frame of jobs/run_pipeline.py: the cleaned input through
+    kernel_routed, one row per input turn. Returns (frame, route record).
+
+    skip_buckets are export buckets (export.bucket_of) left out of the
+    frame. Their filter applies to the INPUT, below the kernel's
+    super-group shuffle: every feature and label is a function of one
+    conversation, and the bucket is a function of its key, so a resumed run
+    computes only the conversations it writes.
+    """
+    df = clean_input(df, cfg)
+    if skip_buckets:
+        df = df.filter(~bucket_of(cfg, n_buckets).isin(sorted(skip_buckets)))
+    frame, n_mega = kernel_routed(df, cfg)
+    route = "kernel+chunked" if n_mega else "kernel"
+    return frame, {"route": route, "mega_convs": n_mega}
 
 
 def _bucketed_kernel(df: DataFrame, cfg: PipelineConfig, price_col: str) -> DataFrame:
     """_kernel over every conversation of df: one shuffle to super-group
-    buckets, one Arrow batch per bucket."""
+    buckets, one Arrow batch per bucket, every input row out."""
     cols = [cfg.key_col, *cfg.order_cols, "role",
             F.coalesce(F.length("text"), F.lit(0)).cast("double").alias("char_len")]
     if price_col != "char_len":

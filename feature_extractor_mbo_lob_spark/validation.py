@@ -8,7 +8,7 @@ the write path). A hard gate raises before anything is written.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .config import PipelineConfig
@@ -19,15 +19,17 @@ class ValidationError(RuntimeError):
     pass
 
 
+def bad_value_count(c: str) -> Column:
+    """Aggregate: rows whose column c is NaN, +/-Inf or null."""
+    return F.sum(
+        (F.isnan(c) | F.col(c).isNull() | (F.abs(F.col(c)) == float("inf"))).cast("long")
+    )
+
+
 def nan_inf_counts(df: DataFrame, cols: list[str]) -> dict[str, int]:
     """Per-column NaN/Inf/null counts in one aggregate pass (reference:
     scan_for_nan_inf, export_aligned/validation.rs:27-95)."""
-    aggs = [
-        F.sum(
-            (F.isnan(c) | F.col(c).isNull() | (F.abs(F.col(c)) == float("inf"))).cast("long")
-        ).alias(c)
-        for c in cols
-    ]
+    aggs = [bad_value_count(c).alias(c) for c in cols]
     row = df.agg(*aggs).collect()[0]
     return {c: int(row[c] or 0) for c in cols}
 

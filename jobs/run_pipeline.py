@@ -19,13 +19,20 @@ Local smoke:
     python jobs/run_pipeline.py --input /root/testdata/sf0.001 \
         --input-format events --output /tmp/fex_out --buckets 4
 
-Reads the transcript table, builds the full point-in-time feature frame
-(+ TLOB labels; through the chunked skew route when the longest
-conversation exceeds the config's skew_max_turns_per_task), validates (NaN
-gate, contract width), and exports
-partitioned parquet with per-bucket lineage manifests. Re-running with
---resume skips buckets whose manifests match config + input snapshot.
-Emits one JSON line of run metrics (rows, wall, throughput) to stdout.
+Reads the transcript table and builds the export frame on the vectorized
+kernel (plans.vectorized.job_features): every contract feature and the TLOB
+labels in one Arrow grouped-map pass, one row per input turn, null labels at
+conversation tails. Conversations longer than the config's
+skew_max_turns_per_task take the chunked route; everything else stays on the
+kernel. export.export_with_manifests runs that lineage once: it writes a
+staging directory, gates the staged feature columns (NaN/Inf/null) together
+with the per-bucket fingerprints in one aggregate, and commits bucket
+directories by rename only when the gate passes. Re-running with --resume
+skips buckets whose manifests match config + input snapshot; the skip filters
+the INPUT, below the kernel's shuffle, so a resumed run computes only the
+buckets it rewrites, and none when every bucket is skipped. Emits one JSON
+line of run metrics (rows, route, wall, throughput) to stdout; rows_in is
+observed on the scan (0 when every bucket was skipped).
 """
 
 from __future__ import annotations
@@ -57,16 +64,15 @@ def main() -> None:
     from feature_extractor_mbo_lob_spark.export import (
         export_with_manifests,
         input_fingerprint_for_path,
+        valid_buckets,
     )
-    from feature_extractor_mbo_lob_spark.labeling import tlob_labels
-    from feature_extractor_mbo_lob_spark.operators.skew import build_features_skewed
-    from feature_extractor_mbo_lob_spark.plans import build_features
-    from feature_extractor_mbo_lob_spark.plans.pipeline import clean_input, max_conv_turns
+    from feature_extractor_mbo_lob_spark.plans.vectorized import job_features
     from feature_extractor_mbo_lob_spark.sources import (
         read_transcripts,
         transcripts_from_events,
     )
     from feature_extractor_mbo_lob_spark import validation as val
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     # .json or .toml, by extension (reference: export_dataset.rs:178-180)
@@ -90,34 +96,29 @@ def main() -> None:
             bad.write.mode("overwrite").text(args.quarantine)
     else:
         df = read_transcripts(spark, args.input, fmt=args.input_format)
-
-    # skew route chosen from the data, as in flagship_pipeline: chunked
-    # carry-in windows, labels included (forward-context rows), when one
-    # conversation would be a straggler task; on parquet input the probe
-    # reads only the footers
-    if max_conv_turns(df) > cfg.skew_max_turns_per_task:
-        labeled = build_features_skewed(clean_input(df, cfg), cfg, with_labels=True)
-    else:
-        labeled = tlob_labels(
-            build_features(df, cfg).withColumn("_p", F.col("char_len")), cfg,
-            price_col="_p",
-        ).drop("_p")
-
-    val.assert_feature_contract(labeled, cfg)
-    val.assert_no_nan_inf(labeled, cfg.feature_columns())
+    scanned = Observation("scan")
+    df = df.observe(scanned, F.count(F.lit(1)).alias("rows"))
 
     fp = input_fingerprint_for_path(spark, args.input)
+    done = (valid_buckets(args.output, cfg.config_hash(), fp) if args.resume
+            else set())
+    frame, route = job_features(df, cfg, args.buckets, skip_buckets=done)
+    val.assert_feature_contract(frame, cfg)
+
     report = export_with_manifests(
-        labeled, cfg, args.output, input_fingerprint=fp,
+        frame, cfg, args.output, input_fingerprint=fp,
         n_buckets=args.buckets, resume=args.resume,
     )
     wall = time.time() - t0
-    n_in = df.count()
+    # the observation fires with the first action over the scan (at the
+    # latest the export's write); when every bucket was skipped none ran
+    n_in = scanned.get["rows"] if set(range(args.buckets)) - done else 0
     print(json.dumps({
         "rows_in": n_in,
         "rows_out": report["rows"],
         "written_buckets": len(report["written_buckets"]),
         "skipped_buckets": len(report["skipped_buckets"]),
+        **route,
         "wall_sec": round(wall, 2),
         "turns_per_sec": round(n_in / wall, 1),
         "config_hash": cfg.config_hash(),

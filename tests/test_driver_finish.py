@@ -154,11 +154,30 @@ def test_graph_finish_null_weight_adds_nothing(spark, name):
         ("bfs_hops", []),
         ("kcore_peel", []),
         ("label_propagation", []),
-        ("modularity", [(None, 0, None, None)]),
+        ("modularity", []),
     ],
 )
 def test_graph_finish_empty_edge_list(spark, name, rows):
     assert [tuple(r) for r in _undirected(name, [])(spark).collect()] == rows
+
+
+def test_modularity_query_empty_graph_matches_oracle(spark, tmp_path):
+    """No word pair reaches min_count: the query and its DuckDB oracle both
+    return no row."""
+    import duckdb
+
+    from feature_extractor_mbo_lob_spark.plans.driver_queries import ORACLES, QUERIES
+
+    docs = tmp_path / "documents.parquet"
+    spark.createDataFrame(
+        [(1, "a b"), (2, "c d e"), (3, "b a f")], "doc_id long, text string"
+    ).write.parquet(str(docs))
+    got = [tuple(r) for r in QUERIES["modularity"](spark, str(tmp_path)).collect()]
+    con = duckdb.connect()
+    con.execute(f"create view documents as select * from read_parquet('{docs}/*.parquet')")
+    want = con.execute(ORACLES["modularity"]).fetchall()
+    con.close()
+    assert got == want == []
 
 
 @pytest.mark.parametrize("name", sorted(_ROUTED))

@@ -125,6 +125,50 @@ def test_export_manifests_and_resume(tmp_path, frame):
     assert back.count() == 20
 
 
+def _files(root: Path) -> dict:
+    return {str(p.relative_to(root)): p.read_bytes() for p in root.rglob("*") if p.is_file()}
+
+
+def test_export_nan_gate_commits_nothing(tmp_path, frame):
+    """One NaN in one feature column: ValidationError, no bucket directory,
+    manifest or staging directory left, and a prior export in the same
+    out_dir stays byte-identical."""
+    out = tmp_path / "exp"
+    good = frame.withColumn("turn_pos", F.col("x"))  # a contract feature column
+    bad = good.withColumn(
+        "turn_pos",
+        F.when(F.col("turn_idx") == 3, float("nan")).otherwise(F.col("turn_pos")),
+    )
+
+    fresh = tmp_path / "fresh"
+    with pytest.raises(val.ValidationError, match="turn_pos"):
+        export_with_manifests(bad, CFG, str(fresh), "fp", n_buckets=4)
+    assert not fresh.exists()
+
+    export_with_manifests(good, CFG, str(out), "fp-1", n_buckets=4)
+    before = _files(out)
+    assert any(k.startswith("part_bucket=") for k in before)
+    with pytest.raises(val.ValidationError, match="turn_pos"):
+        export_with_manifests(bad, CFG, str(out), "fp-2", n_buckets=4)
+    assert _files(out) == before
+    assert sorted(p.name for p in out.iterdir()) == sorted(
+        {k.split("/")[0] for k in before}
+    )
+
+
+def test_export_all_buckets_skipped_runs_no_job(tmp_path, frame):
+    out = str(tmp_path / "exp")
+    export_with_manifests(frame, CFG, out, "fp", n_buckets=2)
+    sc = frame.sparkSession.sparkContext
+    sc.setJobGroup("all-skipped", "resume with every manifest valid")
+    try:
+        rep = export_with_manifests(frame, CFG, out, "fp", n_buckets=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rep["skipped_buckets"] == [0, 1] and rep["written_buckets"] == []
+    assert list(sc.statusTracker().getJobIdsForGroup("all-skipped")) == []
+
+
 def test_schema_digest_stable_across_processes(frame):
     """str hashes are salted per process; the manifest's schema_version
     must not be."""

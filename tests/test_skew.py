@@ -89,7 +89,8 @@ def test_flagship_auto_skew_routing_identical(corpus):
 
     plain = grid(flagship_pipeline(corpus, CFG))
     routed = grid(flagship_pipeline(corpus, cfg))            # probe trips
-    direct = grid(flagship_skewed(corpus, cfg))
+    # flagship_skewed keeps every row; the label filter is its callers'
+    direct = grid(flagship_skewed(corpus, cfg).filter(F.col("label").isNotNull()))
     vec = grid(vectorized_flagship(corpus, cfg))             # split+union path
     assert plain == routed
     assert plain == direct
@@ -110,10 +111,10 @@ def test_add_chunks_forward_context(spark):
 
 
 def test_job_picks_skew_route_from_data(corpus, tmp_path):
-    """jobs/run_pipeline.py routes through build_features_skewed when the
-    longest conversation exceeds cfg.skew_max_turns_per_task, and exports
-    the same rows as with the default threshold. Subprocesses, because
-    main() stops its session."""
+    """jobs/run_pipeline.py takes the chunked route for the conversations
+    longer than cfg.skew_max_turns_per_task, records it, and exports the
+    same rows as with the default threshold. Subprocesses, because main()
+    stops its session."""
     import json
     import subprocess
     import sys
@@ -139,15 +140,54 @@ def test_job_picks_skew_route_from_data(corpus, tmp_path):
         assert r.returncode == 0, r.stderr[-3000:]
         report = json.loads(r.stdout.strip().splitlines()[-1])
         assert report["rows_out"] == report["rows_in"] == corpus.count()
-        return pq.read_table(out).to_pandas()
+        return report, pq.read_table(out).to_pandas()
 
     assert max_conv_turns(corpus) == 300
-    plain = run("plain")
-    routed = run("routed", skew_max_turns_per_task=50)
-    # the chunked route builds its columns in another order: proof it ran
-    assert list(plain.columns) != list(routed.columns)
-    assert sorted(plain.columns) == sorted(routed.columns)
+    plain_report, plain = run("plain")
+    routed_report, routed = run("routed", skew_max_turns_per_task=50)
+    assert (plain_report["route"], plain_report["mega_convs"]) == ("kernel", 0)
+    assert (routed_report["route"], routed_report["mega_convs"]) == ("kernel+chunked", 1)
     keys = ["conv_id", "turn_idx"]
     plain = plain.sort_values(keys).reset_index(drop=True)
     routed = routed[plain.columns].sort_values(keys).reset_index(drop=True)
     assert plain.equals(routed)
+
+
+@pytest.mark.parametrize("skew_max_turns", [250_000, 50])
+def test_job_export_equals_declarative_on_every_row(spark, corpus, tmp_path,
+                                                    skew_max_turns):
+    """The job's export (job_features through export_with_manifests) equals
+    r6(build_features + tlob_labels) on every input row — null-label tails
+    included — and every feature and label column, on both routes."""
+    import dataclasses
+
+    from feature_extractor_mbo_lob_spark.export import BUCKET_COL, export_with_manifests
+    from feature_extractor_mbo_lob_spark.labeling import tlob_labels
+    from feature_extractor_mbo_lob_spark.plans.pipeline import r6
+    from feature_extractor_mbo_lob_spark.plans.vectorized import job_features
+
+    cfg = dataclasses.replace(CFG, skew_max_turns_per_task=skew_max_turns)
+    frame, route = job_features(corpus, cfg, 4)
+    assert route["route"] == ("kernel" if skew_max_turns > 300 else "kernel+chunked")
+    out = str(tmp_path / "out")
+    report = export_with_manifests(frame, cfg, out, "fp", n_buckets=4)
+    got = spark.read.parquet(out).drop(BUCKET_COL)
+
+    feats = build_features(corpus, CFG)
+    want = tlob_labels(feats.withColumn("_p", F.col("char_len")), CFG, price_col="_p")
+    want = want.select(
+        "conv_id", "turn_idx", "ts",
+        *[r6(F.col(c)).alias(c) for c in CFG.feature_columns()],
+        "label", r6(F.col("label_pct_change")).alias("label_pct_change"),
+    )
+    assert sorted(got.columns) == sorted(want.columns)
+
+    def grid(df):
+        return {(r["conv_id"], r["turn_idx"]): tuple(r[c] for c in want.columns[2:])
+                for r in df.select(*want.columns).collect()}
+
+    g, w = grid(got), grid(want)
+    assert report["rows"] == len(g) == len(w) == corpus.count()
+    assert sum(v[-2] is None for v in g.values()) > 0  # the tails are there
+    diffs = [k for k in w if g.get(k) != w[k]]
+    assert not diffs, f"{len(diffs)} differing rows, e.g. {diffs[:2]}"

@@ -69,3 +69,37 @@ def test_acf_exact_alternating_series(spark, cfg):
     t = t.withColumn("value", F.when(F.col("turn_idx") % 2 == 0, 1.0).otherwise(-1.0))
     out = {r.lag: r for r in acf_exact(t, cfg, "value", lags=(1, 2)).collect()}
     assert out[1].acf == -1.0 and out[2].acf == 1.0
+
+
+def test_job_resume_filters_input_below_kernel_shuffle(spark, tmp_path):
+    """On resume the job's frame skips buckets on the INPUT: the bucket
+    Filter sits below the Exchange that feeds the one grouped pandas stage,
+    and no Window runs. The frame keeps exactly the other buckets' rows."""
+    from pyspark.sql import functions as F
+
+    from feature_extractor_mbo_lob_spark.export import bucket_of
+    from feature_extractor_mbo_lob_spark.plans.vectorized import job_features
+
+    src = tmp_path / "src"
+    synth_transcripts(spark, n_convs=15, seed=5).write.parquet(str(src))
+    df = spark.read.parquet(str(src))
+    skip = {0, 3, 5}
+    frame, route = job_features(df, CFG, 16, skip_buckets=skip)
+    assert route == {"route": "kernel", "mega_convs": 0}
+
+    plan = frame._jdf.queryExecution().executedPlan().toString().splitlines()
+    assert sum("FlatMapGroupsInPandas" in ln for ln in plan) == 1
+    assert not any("Window" in ln for ln in plan)
+    kernel = next(i for i, ln in enumerate(plan) if "FlatMapGroupsInPandas" in ln)
+    exchange = next(i for i, ln in enumerate(plan) if i > kernel and "Exchange" in ln)
+    bucket_filter = next(
+        i for i, ln in enumerate(plan)
+        if "Filter" in ln and "xxhash64(conv_id" in ln and ", 16)" in ln
+    )
+    assert kernel < exchange < bucket_filter
+
+    kept = df.filter(~bucket_of(CFG, 16).isin(sorted(skip)))
+    assert frame.count() == kept.count() < df.count()
+    assert frame.select(bucket_of(CFG, 16).alias("b")).filter(
+        F.col("b").isin(sorted(skip))
+    ).count() == 0

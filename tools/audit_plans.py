@@ -94,11 +94,24 @@ def main() -> None:
         build_features(t, CFG)
         .filter(F.col("conv_id") == "c42")
         .select("conv_id", "turn_idx", "char_mean_w8"),
-        "The default build_features, as the job runs it. The bucketed "
+        "The default build_features (the declarative specification; the "
+        "shipped job builds its frame with plans.vectorized.job_features, "
+        "next section). The bucketed "
         "order-stats Arrow stage (FlatMapGroupsInPandas) is a barrier: the "
         "key filter stays above it (only the null checks of clean_input "
         "reach the scan's DataFilters), and the scan reads every column, "
         "`tool` included, because the stage returns its whole input row.",
+    ))
+
+    from feature_extractor_mbo_lob_spark.plans.vectorized import job_features
+
+    sections.append(summarize(
+        "shipped job frame on resume (bucket skip below the kernel shuffle)",
+        job_features(t, CFG, 16, skip_buckets={0, 3, 5})[0],
+        "jobs/run_pipeline.py --resume with 3 of 16 export buckets valid. "
+        "The bucket filter reaches the scan's DataFilters, below the ONE "
+        "exchange that feeds the ONE python stage; no window runs.",
+        forbid=("Window [",),
     ))
 
     labels = t.filter(F.col("role") == "tool").select(
