@@ -66,7 +66,8 @@ class PipelineConfig:
 
     labels: LabelConfig = field(default_factory=LabelConfig)
 
-    # skew handling: conversations longer than this get salted/chunked
+    # skew handling: conversations longer than this are computed by the
+    # kernel in chunks of this many turns (plans.vectorized.kernel_routed)
     skew_max_turns_per_task: int = 250_000
 
     def feature_count(self) -> int:

@@ -47,6 +47,7 @@ STAGING_PREFIX = "_staging-"
 @dataclass
 class PartitionManifest:
     bucket: int
+    n_buckets: int
     rows: int
     keys: int
     value_checksum: str
@@ -109,21 +110,28 @@ def manifest_path(out_dir: str, bucket: int) -> Path:
     return Path(out_dir) / MANIFEST_DIR / f"bucket={bucket}.json"
 
 
-def valid_buckets(out_dir: str, config_hash: str, input_fingerprint: str) -> set[int]:
-    """Buckets whose manifest exists and matches config + input — these are
-    skipped on resume."""
-    mdir = Path(out_dir) / MANIFEST_DIR
-    done = set()
-    if not mdir.exists():
-        return done
-    for p in mdir.glob("bucket=*.json"):
+def valid_buckets(out_dir: str, config_hash: str, input_fingerprint: str,
+                  n_buckets: int) -> set[int]:
+    """Buckets whose manifest exists and matches config + input + bucket
+    count — these are skipped on resume. A ValueError names both counts,
+    before any Spark job, when out_dir holds a manifest of another bucket
+    count: bucket k of n holds other conversations than bucket k of m, and
+    its part_bucket=k directory would mix with the new export's."""
+    ms = []
+    for p in (Path(out_dir) / MANIFEST_DIR).glob("bucket=*.json"):
         try:
-            m = json.loads(p.read_text())
+            ms.append(json.loads(p.read_text()))
         except Exception:
             continue
-        if m.get("config_hash") == config_hash and m.get("input_fingerprint") == input_fingerprint:
-            done.add(int(m["bucket"]))
-    return done
+    other = {m.get("n_buckets") for m in ms} - {n_buckets}
+    if other:
+        raise ValueError(
+            f"{out_dir} holds manifests for {', '.join(sorted(map(str, other)))} "
+            f"buckets; this run asks for {n_buckets}. Write to a new directory."
+        )
+    return {int(m["bucket"]) for m in ms
+            if m.get("config_hash") == config_hash
+            and m.get("input_fingerprint") == input_fingerprint}
 
 
 def export_with_manifests(
@@ -137,6 +145,8 @@ def export_with_manifests(
     """Write df partitioned by conv-bucket with one lineage manifest per
     bucket, running df's lineage once.
 
+    0. out_dir holding manifests of another bucket count raises ValueError
+       before any Spark job (valid_buckets).
     1. On resume, buckets with a valid manifest are skipped; when every
        bucket is, nothing runs. The skip is a filter on df's output, which
        Catalyst does not push below a grouped pandas stage, so a caller that
@@ -153,7 +163,9 @@ def export_with_manifests(
     Returns a run report {written_buckets, skipped_buckets, rows, wall_sec}.
     """
     cfg_hash = cfg.config_hash()
-    done = valid_buckets(out_dir, cfg_hash, input_fingerprint) if resume else set()
+    done = valid_buckets(out_dir, cfg_hash, input_fingerprint, n_buckets)
+    if not resume:
+        done = set()
     report = {"written_buckets": [], "skipped_buckets": sorted(done), "rows": 0,
               "wall_sec": 0.0}
     todo_buckets = set(range(n_buckets)) - done
@@ -195,6 +207,7 @@ def export_with_manifests(
     for b, v in fps.items():
         m = PartitionManifest(
             bucket=b,
+            n_buckets=n_buckets,
             rows=v["rows"],
             keys=v["keys"],
             value_checksum=v["checksum"],

@@ -139,8 +139,8 @@ def with_order_stats_pandas(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
     Super-grouped (ordering.super_group): one Arrow batch per conversation
     bucket, with every conversation of the bucket processed at once inside.
-    Mega-conversations are bounded by the skew route's chunk key
-    (operators/skew.py), which this stage is keyed on there.
+    Part of the declarative specification (plans.build_features): a mega
+    conversation is one group here; the shipped job's kernel chunks it.
     """
     order_cols = list(cfg.order_cols)
     windows = tuple(cfg.window_sizes)

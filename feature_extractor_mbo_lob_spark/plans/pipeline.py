@@ -52,6 +52,11 @@ def build_features(df: DataFrame, cfg: PipelineConfig,
     pre-computed at the scan) — the window sort then moves ~40-byte rows
     instead of ~150-byte rows. Use when downstream doesn't need raw text
     (memory bandwidth is the scaling ceiling of the window stage).
+
+    The order-stats Arrow stage (FlatMapGroupsInPandas) blocks filter and
+    projection pushdown: a filter or select applied to the result stays
+    above it, so the scan reads every input column (only narrow=True prunes)
+    and every conversation. Filter the input first to compute fewer.
     """
     df = clean_input(df, cfg)
     char_len = F.coalesce(F.length("text"), F.lit(0)).cast("double")
@@ -71,18 +76,18 @@ def build_features(df: DataFrame, cfg: PipelineConfig,
 
 
 def max_conv_turns(df: DataFrame) -> int:
-    """Longest conversation in the corpus: the skew routing probe of the
-    job, flagship_pipeline and vectorized_flagship. turn_idx is dense 0-based
-    per conversation (transcript contract), so max(turn_idx)+1 answers it
-    without a groupBy.
+    """Longest conversation in the corpus: the skew routing probe of
+    plans.vectorized.kernel_routed (the job and vectorized_flagship).
+    turn_idx is dense 0-based per conversation (transcript contract), so
+    max(turn_idx)+1 answers it without a groupBy.
 
     Only the fast path is free: when df is backed by local parquet files
     (≤256 of them), the max comes straight from the parquet FOOTER column
     statistics on the driver — zero Spark jobs, ~1 ms/file. Footer stats
     bound the UNFILTERED data, so for a filtered df this can only
-    over-estimate — which at worst routes through the (bit-identical) skew
-    path, never the reverse. Otherwise it is one Spark job: a
-    map-side-combined max over the pruned int column, which scans the
+    over-estimate — which at worst costs the route one small collect of the
+    long conversations' ids, never the reverse. Otherwise it is one Spark
+    job: a map-side-combined max over the pruned int column, which scans the
     column (parquet is a v1 source here, so no aggregate is pushed into the
     scan; ~0.15 s on a 600K-row corpus)."""
     try:
@@ -122,33 +127,6 @@ def max_conv_turns(df: DataFrame) -> int:
     return int(row[0] or 0) + 1
 
 
-def flagship_skewed(
-    df: DataFrame,
-    cfg: PipelineConfig,
-    price_col: str = "char_len",
-    chunk_turns: int | None = None,
-) -> DataFrame:
-    """Skew-safe flagship: every input row, with flagship_pipeline's values
-    (tested) and null labels at conversation tails, but mega-conversations
-    are chunked (operators/skew.py) so no single task ever holds more than
-    ~chunk_turns rows. Labels are computed INSIDE the chunked cascade via
-    forward-context rows — no second pass, no join."""
-    from ..operators.skew import build_features_skewed
-
-    out = build_features_skewed(
-        clean_input(df, cfg), cfg, chunk_turns=chunk_turns,
-        with_labels=True, price_col=price_col,
-    )
-    return out.select(
-        cfg.key_col,
-        "turn_idx",
-        cfg.ts_col,
-        *[r6(F.col(c)).alias(c) for c in cfg.feature_columns()],
-        "label",
-        r6(F.col("label_pct_change")).alias("label_pct_change"),
-    )
-
-
 def flagship_pipeline(
     df: DataFrame,
     cfg: PipelineConfig | None = None,
@@ -162,16 +140,12 @@ def flagship_pipeline(
     join. Labels that come from a different table are aligned with the
     as-of join operator (operators/asof.py) instead.
 
-    Skew route: when max_conv_turns exceeds cfg.skew_max_turns_per_task the
-    whole corpus goes through flagship_skewed (identical rows, tested) — a
-    10M-turn conversation otherwise becomes one straggler task that caps
-    cluster scaling (AQE cannot split Window execs).
+    This is the unchunked specification: a conversation is one Window
+    partition whatever its length (AQE cannot split Window execs). The
+    engine that cuts mega conversations into chunks is
+    plans.vectorized.kernel_routed, tested equal to this on every row.
     """
     cfg = cfg or PipelineConfig()
-    if max_conv_turns(df) > cfg.skew_max_turns_per_task:
-        return flagship_skewed(df, cfg, price_col=price_col).filter(
-            F.col("label").isNotNull()
-        )
     # narrow when the label timeline derives from char_len (output carries no
     # raw text, so the window sort never has to move it)
     feats = build_features(df, cfg, narrow=(price_col == "char_len"))

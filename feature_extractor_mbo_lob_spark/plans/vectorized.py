@@ -14,14 +14,17 @@ tested against.
 The kernel keeps every input row: conversation tails, whose forward label
 frame is incomplete, carry null labels. vectorized_flagship drops them, and
 its rows are bit-identical to flagship_pipeline (tested in
-tests/test_vectorized.py): sums are exact integer arithmetic, all float
-expressions use the same formulas in the same order.
+tests/test_vectorized.py and tests/test_skew.py): sums are exact integer
+arithmetic, all float expressions use the same formulas in the same order.
 
 Scale: each executor core processes buckets independently in an Arrow-fed
 numpy kernel — no shared-JVM sort-buffer bandwidth contention, which is what
 caps Window-cascade scaling on many-core nodes. Conversations longer than
-cfg.skew_max_turns_per_task leave the kernel for the chunked cascade
-(plans.flagship_skewed), so no bucket holds an unsplittable straggler.
+cfg.skew_max_turns_per_task are cut into chunks of that many turns
+(operators/skew.add_chunks) that the same kernel computes, so no bucket
+holds an unsplittable straggler: context rows copied from the neighbouring
+chunks feed the sliding frames, lags and label frames, and the cumulative
+lanes add a per-chunk carry taken from a first kernel pass (kernel_routed).
 """
 
 from __future__ import annotations
@@ -40,16 +43,26 @@ from ..contract import (
     feature_columns,
 )
 from ..export import bucket_of
+from ..guards import collect_at_most
 from ..operators import ordering
 from ..operators.order_stats import _bucket_order_stats, flow_vol_from_sig
-from .pipeline import clean_input, flagship_skewed, max_conv_turns
+from ..operators.skew import CHUNK_KEY, add_chunks
+from .pipeline import clean_input, max_conv_turns
+
+# the cumulative lanes, summed from the conversation start: turns, role
+# counts, chars and session starts
+LANES = ("turns", "user", "assistant", "tool", "chars", "starts")
+# the most mega conversations, and chunks of them, one route may hold: both
+# lists are collected to the driver and the carries ride the kernel closure
+MAX_CHUNKS = 100_000
 
 
-def _segments(keys: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    n = len(keys)
-    change = np.empty(n, dtype=bool)
+def _segments(*keys: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    n = len(keys[0])
+    change = np.zeros(n, dtype=bool)
     change[0] = True
-    change[1:] = keys[1:] != keys[:-1]
+    for k in keys:
+        change[1:] |= k[1:] != k[:-1]
     starts = np.flatnonzero(change)
     sizes = np.diff(np.append(starts, n))
     conv_idx = np.repeat(np.arange(len(starts)), sizes)
@@ -66,18 +79,30 @@ def _seg_sliding_sum(vals: np.ndarray, gstart: np.ndarray, w: int) -> np.ndarray
     return cs[np.arange(n) + 1] - cs[lo]
 
 
-def _kernel(pdf: pd.DataFrame, cfg: PipelineConfig, price_from_char_len: bool) -> pd.DataFrame:
+def _kernel(pdf: pd.DataFrame, cfg: PipelineConfig, price_from_char_len: bool,
+            carries: pd.DataFrame | None = None, partials: bool = False) -> pd.DataFrame:
+    """Features and labels of one bucket. Its segments are conversations,
+    or, when pdf has the _chunk/_ctx columns of skew.add_chunks, the
+    (conversation, chunk) pairs: context rows (_ctx = 1) feed the sliding
+    frames, lags and label frames, add nothing to the cumulative lanes and
+    are left out of the output.
+
+    carries: per (key, _chunk), each lane's sum over the conversation's
+    earlier chunks and the conversation's first-row timestamp (built by
+    kernel_routed); a segment without an entry starts from zero.
+    partials=True returns instead one row per segment with its lane totals
+    and first timestamp: the first pass the carries are computed from."""
     k, h, theta = cfg.labels.smoothing_k, cfg.labels.horizon, cfg.labels.threshold
-    sort_cols = [cfg.key_col] + list(cfg.order_cols)
-    pdf = pdf.sort_values(sort_cols, kind="mergesort").reset_index(drop=True)
+    seg_cols = [cfg.key_col] + (["_chunk"] if "_chunk" in pdf.columns else [])
+    pdf = pdf.sort_values(seg_cols + list(cfg.order_cols), kind="mergesort").reset_index(drop=True)
     n = len(pdf)
-    keys = pdf[cfg.key_col].to_numpy()
     # robust to pandas datetime64[ns] vs [us] backing
     us = pdf[cfg.ts_col].to_numpy(dtype="datetime64[us]").astype(np.int64)
     x = pdf["char_len"].to_numpy(dtype=np.float64)
     role = pdf["role"].to_numpy()
+    real = pdf["_ctx"].to_numpy() == 0 if "_ctx" in pdf.columns else np.ones(n, dtype=bool)
 
-    starts, sizes, conv_idx, pos = _segments(keys)
+    starts, sizes, conv_idx, pos = _segments(*(pdf[c].to_numpy() for c in seg_cols))
     gstart = starts[conv_idx]
     gend = (starts + sizes)[conv_idx]  # exclusive
     rows = np.arange(n)
@@ -88,40 +113,46 @@ def _kernel(pdf: pd.DataFrame, cfg: PipelineConfig, price_from_char_len: bool) -
     is_assistant = (role == "assistant").astype(np.float64)
     is_tool = (role == "tool").astype(np.float64)
 
-    # --- cumulative state (matches operators/state.py expressions) ----------
-    def seg_cumsum(v):
-        cs = np.cumsum(v)
-        base = np.where(gstart > 0, cs[gstart - 1], 0.0)
-        return cs - base
-
-    turns = (pos + 1).astype(np.float64)
-    u = seg_cumsum(is_user)
-    a = seg_cumsum(is_assistant)
-    t_ = seg_cumsum(is_tool)
-    out["turn_pos"] = pos.astype(np.float64)
-    out["turns_so_far"] = turns
-    out["user_turns_so_far"] = u
-    out["assistant_turns_so_far"] = a
-    out["tool_turns_so_far"] = t_
-    out["chars_so_far"] = seg_cumsum(x)
-
     prev_us = np.empty(n, dtype=np.int64)
     prev_us[1:] = us[:-1]
     prev_us[0] = us[0]
     first_row = pos == 0
-    dt = np.where(first_row, 0.0, (us - prev_us) / 1e6)
-    out["dt_seconds"] = dt
-    out["secs_since_start"] = (us - us[gstart]) / 1e6
+    out["dt_seconds"] = np.where(first_row, 0.0, (us - prev_us) / 1e6)
+    gap_us = int(cfg.session_gap_s * 1e6)
+    is_start = (first_row | ((us - prev_us) > gap_us)).astype(np.float64)
+    out["is_session_start"] = is_start
 
+    # --- cumulative state (matches operators/state.py expressions) ----------
+    inc = np.stack([np.ones(n), is_user, is_assistant, is_tool, x, is_start]) * real
+    first_us = us[np.minimum.reduceat(np.where(real, rows, n), starts)]
+    seg_keys = [pdf[c].to_numpy()[starts] for c in seg_cols]
+    if partials:
+        part = pd.DataFrame(np.add.reduceat(inc, starts, axis=1).T, columns=list(LANES))
+        for col, v in zip(seg_cols, seg_keys):
+            part[col] = v
+        part["first_us"] = first_us
+        return part
+    carry = np.zeros((len(LANES), len(starts)))
+    if carries is not None:
+        c = carries.reindex(pd.MultiIndex.from_arrays(seg_keys))
+        carry = c[list(LANES)].fillna(0.0).to_numpy().T
+        hit = c["first_us"].notna().to_numpy()
+        first_us[hit] = c["first_us"].to_numpy()[hit]
+    cs = np.cumsum(inc, axis=1)
+    base = np.where(gstart > 0, cs[:, gstart - 1], 0.0)
+    turns, u, a, t_, chars, n_starts = cs - base + carry[:, conv_idx]
+    out["turn_pos"] = turns - 1.0
+    out["turns_so_far"] = turns
+    out["user_turns_so_far"] = u
+    out["assistant_turns_so_far"] = a
+    out["tool_turns_so_far"] = t_
+    out["chars_so_far"] = chars
+    out["secs_since_start"] = (us - first_us[conv_idx]) / 1e6
     out["net_role_flow"] = (u - a) / (u + a + DIVISION_GUARD_EPS)
     out["net_tool_flow"] = (t_ - (u + a)) / (turns + DIVISION_GUARD_EPS)
     out["session_ready"] = (turns >= float(cfg.warmup_turns)).astype(np.float64)
     out["schema_version"] = np.full(n, float(SCHEMA_VERSION))
-
-    gap_us = int(cfg.session_gap_s * 1e6)
-    is_start = (first_row | ((us - prev_us) > gap_us)).astype(np.float64)
-    out["is_session_start"] = is_start
-    out["session_id"] = seg_cumsum(is_start) - 1.0
+    out["session_id"] = n_starts - 1.0
 
     hr = (us // 3_600_000_000) % 24  # UTC hour (session tz pinned to UTC)
     out["time_regime"] = np.select(
@@ -218,7 +249,7 @@ def _kernel(pdf: pd.DataFrame, cfg: PipelineConfig, price_from_char_len: bool) -
         np.where(_mask, 0, label).astype(np.int8), _mask
     )
     res["label_pct_change"] = r6_np(l)
-    return res
+    return res if real.all() else res[real]
 
 
 def vectorized_flagship(df: DataFrame, cfg: PipelineConfig | None = None,
@@ -236,33 +267,68 @@ def kernel_routed(df: DataFrame, cfg: PipelineConfig,
     conversation tails), r6-rounded; returns (frame, number of mega
     conversations).
 
-    Skew route: max_conv_turns probes the longest conversation. If any
-    conversation exceeds cfg.skew_max_turns_per_task, those conversations'
-    ids (a tiny list — one groupBy row per conversation, filtered) are split
-    out through the chunked declarative path (plans.flagship_skewed,
-    bit-identical rows) and unioned back; everything else stays on the
-    kernel. A mega conversation otherwise lands whole in one Arrow bucket —
-    an unsplittable straggler + memory spike.
+    Skew route: max_conv_turns probes the longest conversation. The
+    conversations longer than chunk = cfg.skew_max_turns_per_task (their
+    ids: one bounded collect) are cut by skew.add_chunks into chunks of
+    chunk turns, each with the max(window, smoothing_k) rows before it and
+    the horizon rows after it as context. A first kernel pass over the
+    chunks gives each chunk's lane totals (a second bounded collect); their
+    exclusive prefix sums over the conversation's chunks, taken in numpy on
+    the driver, are the carries the kernel adds. The chunks and every other
+    conversation then share one grouped-map stage. A mega conversation would
+    otherwise land whole in one Arrow bucket — an unsplittable straggler +
+    memory spike.
     """
-    if max_conv_turns(df) <= cfg.skew_max_turns_per_task:
-        return _bucketed_kernel(df, cfg, price_col), 0
-    mega = [
-        r[0]
-        for r in df.groupBy(cfg.key_col)
-        .agg(F.max("turn_idx").alias("_m"))
-        .filter(F.col("_m") >= cfg.skew_max_turns_per_task)
-        .select(cfg.key_col)
-        .collect()
-    ]
-    rest = _bucketed_kernel(df.filter(~F.col(cfg.key_col).isin(mega)), cfg, price_col)
-    skewed = flagship_skewed(
-        df.filter(F.col(cfg.key_col).isin(mega)), cfg, price_col=price_col
+    key, chunk = cfg.key_col, cfg.skew_max_turns_per_task
+    cols = [key, *cfg.order_cols, "role",
+            F.coalesce(F.length("text"), F.lit(0)).cast("double").alias("char_len")]
+    if price_col != "char_len":
+        cols.append(F.col(price_col).alias("_p"))
+    narrow = df.select(*cols)
+    mega = []
+    if max_conv_turns(df) > chunk:
+        mega = _collect_capped(
+            df.groupBy(key).agg(F.max("turn_idx").alias("_m"))
+            .filter(F.col("_m") >= chunk).select(key), "mega conversations", chunk)
+    if not mega:  # none, or footer stats over-estimated a filtered df
+        return _bucketed_kernel(narrow, cfg, key), 0
+    back = max(max(cfg.window_sizes), cfg.labels.smoothing_k)
+    if chunk <= max(back, cfg.labels.horizon):
+        raise ValueError(
+            f"chunk_turns = skew_max_turns_per_task = {chunk} must exceed the "
+            "largest rolling window, smoothing_k and the label horizon"
+        )
+    is_mega = F.col(key).isin([r[0] for r in mega])
+    chunks = add_chunks(narrow.filter(is_mega), cfg, chunk, back, cfg.labels.horizon)
+    parts = _collect_capped(
+        ordering.super_group(chunks, CHUNK_KEY, "_vb").groupBy("_vb").applyInPandas(
+            lambda pdf: _kernel(pdf, cfg, True, partials=True),
+            schema=f"{key} string, _chunk long, "
+            + "".join(f"{c} double, " for c in LANES) + "first_us long"),
+        "carry table", chunk, to_pandas=True,
+    ).sort_values([key, "_chunk"]).set_index([key, "_chunk"])
+    # exclusive prefix sums over the conversation's chunks, and chunk 0's
+    # first-row timestamp
+    by_conv = parts.groupby(level=0, sort=False)
+    carries = by_conv[list(LANES)].cumsum() - parts[list(LANES)]
+    carries["first_us"] = by_conv["first_us"].transform("first")
+    rest = narrow.filter(~is_mega).select(
+        "*", F.lit(0).cast("long").alias("_chunk"), F.lit(0).alias("_ctx"),
+        F.col(key).alias(CHUNK_KEY),
     )
-    # align types to the kernel's output schema before the union
-    skewed = skewed.select(
-        *[F.col(f.name).cast(f.dataType) for f in rest.schema.fields]
-    )
-    return rest.unionByName(skewed), len(mega)
+    return _bucketed_kernel(rest.unionByName(chunks), cfg, CHUNK_KEY, carries), len(mega)
+
+
+def _collect_capped(df: DataFrame, what: str, chunk: int, to_pandas: bool = False):
+    """guards.collect_at_most at MAX_CHUNKS, or a ValueError naming the
+    skew threshold past it."""
+    rows = collect_at_most(df, MAX_CHUNKS, what, to_pandas)
+    if rows is None:
+        raise ValueError(
+            f"{what}: more than MAX_CHUNKS={MAX_CHUNKS} rows at "
+            f"skew_max_turns_per_task={chunk}; raise the threshold"
+        )
+    return rows
 
 
 def job_features(df: DataFrame, cfg: PipelineConfig, n_buckets: int,
@@ -285,16 +351,11 @@ def job_features(df: DataFrame, cfg: PipelineConfig, n_buckets: int,
     return frame, {"route": route, "mega_convs": n_mega}
 
 
-def _bucketed_kernel(df: DataFrame, cfg: PipelineConfig, price_col: str) -> DataFrame:
-    """_kernel over every conversation of df: one shuffle to super-group
-    buckets, one Arrow batch per bucket, every input row out."""
-    cols = [cfg.key_col, *cfg.order_cols, "role",
-            F.coalesce(F.length("text"), F.lit(0)).cast("double").alias("char_len")]
-    if price_col != "char_len":
-        cols.append(F.col(price_col).alias("_p"))
-    narrow = df.select(*cols)
-    bucketed = ordering.super_group(narrow, cfg.key_col, "_vb")
-
+def _bucketed_kernel(narrow: DataFrame, cfg: PipelineConfig, group_key: str,
+                     carries: pd.DataFrame | None = None) -> DataFrame:
+    """_kernel over every segment of narrow (keys, order, role, char_len and
+    _p for another price column): one shuffle to super-group buckets of
+    group_key, one Arrow batch per bucket, every real row out."""
     fcols = feature_columns(cfg.window_sizes)
     ts_type = narrow.schema[cfg.ts_col].dataType.simpleString()
     out_schema = (
@@ -302,9 +363,10 @@ def _bucketed_kernel(df: DataFrame, cfg: PipelineConfig, price_col: str) -> Data
         + ", ".join(f"{c} double" for c in fcols)
         + ", label tinyint, label_pct_change double"
     )
-    price_from_char_len = price_col == "char_len"
+    price_from_char_len = "_p" not in narrow.columns
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _kernel(pdf.drop(columns=["_vb"]), cfg, price_from_char_len)
+        return _kernel(pdf, cfg, price_from_char_len, carries)
 
+    bucketed = ordering.super_group(narrow, group_key, "_vb")
     return bucketed.groupBy("_vb").applyInPandas(fn, schema=out_schema)

@@ -23,16 +23,19 @@ Reads the transcript table and builds the export frame on the vectorized
 kernel (plans.vectorized.job_features): every contract feature and the TLOB
 labels in one Arrow grouped-map pass, one row per input turn, null labels at
 conversation tails. Conversations longer than the config's
-skew_max_turns_per_task take the chunked route; everything else stays on the
-kernel. export.export_with_manifests runs that lineage once: it writes a
-staging directory, gates the staged feature columns (NaN/Inf/null) together
-with the per-bucket fingerprints in one aggregate, and commits bucket
-directories by rename only when the gate passes. Re-running with --resume
-skips buckets whose manifests match config + input snapshot; the skip filters
-the INPUT, below the kernel's shuffle, so a resumed run computes only the
-buckets it rewrites, and none when every bucket is skipped. Emits one JSON
-line of run metrics (rows, route, wall, throughput) to stdout; rows_in is
-observed on the scan (0 when every bucket was skipped).
+skew_max_turns_per_task are cut into chunks of that many turns, which the
+same kernel computes with carried-in cumulative state (the chunked route);
+there is no other feature engine. export.export_with_manifests runs that
+lineage once: it writes a staging directory, gates the staged feature
+columns (NaN/Inf/null) together with the per-bucket fingerprints in one
+aggregate, and commits bucket directories by rename only when the gate
+passes. Re-running with --resume skips buckets whose manifests match config
++ input snapshot + bucket count, and an output written with another
+--buckets is refused; the skip filters the INPUT, below the kernel's
+shuffle, so a resumed run computes only the buckets it rewrites, and none
+when every bucket is skipped. Emits one JSON line of run metrics (rows,
+route, wall, throughput) to stdout; rows_in is observed on the scan (0 when
+every bucket was skipped).
 """
 
 from __future__ import annotations
@@ -100,8 +103,10 @@ def main() -> None:
     df = df.observe(scanned, F.count(F.lit(1)).alias("rows"))
 
     fp = input_fingerprint_for_path(spark, args.input)
-    done = (valid_buckets(args.output, cfg.config_hash(), fp) if args.resume
-            else set())
+    # refuses an output of another bucket count before any Spark job
+    done = valid_buckets(args.output, cfg.config_hash(), fp, args.buckets)
+    if not args.resume:
+        done = set()
     frame, route = job_features(df, cfg, args.buckets, skip_buckets=done)
     val.assert_feature_contract(frame, cfg)
 

@@ -199,8 +199,49 @@ def test_valid_buckets_rejects_config_change(tmp_path, frame):
     out_dir = str(tmp_path / "exp2")
     export_with_manifests(frame, CFG, out_dir, "fp", n_buckets=2)
     other_cfg = PipelineConfig(window_sizes=(8,))
-    assert valid_buckets(out_dir, CFG.config_hash(), "fp")
-    assert not valid_buckets(out_dir, other_cfg.config_hash(), "fp")
+    assert valid_buckets(out_dir, CFG.config_hash(), "fp", 2)
+    assert not valid_buckets(out_dir, other_cfg.config_hash(), "fp", 2)
+
+
+@pytest.mark.parametrize("resume", [True, False])
+def test_export_refuses_other_bucket_count(tmp_path, frame, resume):
+    """An output written with 4 buckets: a 2-bucket export into it raises,
+    naming both counts, before any Spark job, and changes no file (bucket
+    k of 2 holds other conversations than bucket k of 4, and the stale
+    part_bucket dirs would mix with the new ones)."""
+    out = tmp_path / "exp"
+    export_with_manifests(frame, CFG, str(out), "fp", n_buckets=4)
+    before = _files(out)
+    with pytest.raises(ValueError, match="manifests for 4 buckets.*asks for 2"):
+        valid_buckets(str(out), CFG.config_hash(), "fp", 2)
+    sc = frame.sparkSession.sparkContext
+    sc.setJobGroup("other-count", "export with another bucket count")
+    try:
+        with pytest.raises(ValueError, match="manifests for 4 buckets.*asks for 2"):
+            export_with_manifests(frame, CFG, str(out), "fp", n_buckets=2,
+                                  resume=resume)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("other-count")) == []
+    assert _files(out) == before
+
+
+def test_export_same_count_resume_rewrites_dropped_bucket(tmp_path, frame):
+    """Same bucket count: a resume rewrites exactly the bucket whose
+    manifest is gone and leaves the other manifests as they were."""
+    out = tmp_path / "exp"
+    rep = export_with_manifests(frame, CFG, str(out), "fp", n_buckets=4)
+    assert all(json.loads(manifest_path(str(out), b).read_text())["n_buckets"] == 4
+               for b in rep["written_buckets"])
+    dropped, *kept = rep["written_buckets"]
+    kept_before = {b: manifest_path(str(out), b).read_text() for b in kept}
+    manifest_path(str(out), dropped).unlink()
+    assert valid_buckets(str(out), CFG.config_hash(), "fp", 4) == set(kept)
+    rep2 = export_with_manifests(frame, CFG, str(out), "fp", n_buckets=4)
+    assert rep2["written_buckets"] == [dropped]
+    assert set(rep2["skipped_buckets"]) == set(kept)
+    assert {b: manifest_path(str(out), b).read_text() for b in kept} == kept_before
+    assert frame.sparkSession.read.parquet(str(out)).count() == 20
 
 
 def test_input_fingerprint_changes_with_data(tmp_path, spark, frame):

@@ -75,18 +75,23 @@ def main() -> None:
         "python stage, nothing else.",
     ))
 
-    from feature_extractor_mbo_lob_spark.plans.pipeline import flagship_skewed
+    import dataclasses
 
+    from feature_extractor_mbo_lob_spark.plans.vectorized import job_features
+
+    chunked_cfg = dataclasses.replace(CFG, window_sizes=(8, 16), skew_max_turns_per_task=32)
     sections.append(summarize(
-        "flagship skewed (chunked carry-in, auto-routed for mega-conversations)",
-        flagship_skewed(t, CFG, price_col="char_len", chunk_turns=500),
-        "The skew path the default entrypoints route to when any "
-        "conversation exceeds cfg.skew_max_turns_per_task: chunk-keyed "
-        "window cascade + tiny carry table broadcast back + labels computed "
-        "inside the same cascade via forward-context rows. Target: the "
-        "big-table exchanges stay O(1) (chunk repartition + the rolling "
-        "stage); the carry join is broadcast, never a shuffle of the table.",
-        forbid=("CartesianProduct",),
+        "job frame, chunked route",
+        job_features(t, chunked_cfg, 16)[0],
+        "jobs/run_pipeline.py's frame when conversations exceed "
+        "cfg.skew_max_turns_per_task (lowered to 32 here, windows 8 and 16): "
+        "their ids and the per-chunk carry table are bounded driver collects "
+        "made while the frame is built; skew.add_chunks copies the context "
+        "rows (its per-conversation chunk count is a broadcast join) and the "
+        "chunks are unioned with the other conversations ahead of the ONE "
+        "python stage, the kernel, which computes every feature and label. "
+        "No Window, no CartesianProduct.",
+        forbid=("Window", "CartesianProduct"),
     ))
 
     sections.append(summarize(
@@ -102,8 +107,6 @@ def main() -> None:
         "reach the scan's DataFilters), and the scan reads every column, "
         "`tool` included, because the stage returns its whole input row.",
     ))
-
-    from feature_extractor_mbo_lob_spark.plans.vectorized import job_features
 
     sections.append(summarize(
         "shipped job frame on resume (bucket skip below the kernel shuffle)",
